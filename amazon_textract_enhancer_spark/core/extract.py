@@ -14,7 +14,6 @@ from __future__ import annotations
 
 from .blocks import (
     build_block_map,
-    confidence_stats,
     document_text,
     extract_kv_pairs,
     reconstruct_tables,
@@ -168,8 +167,3 @@ def extract_turn(key: str, text: str | None) -> dict:
         "blocks": [],
         "nodes": [],
     }
-
-
-def extract_stats(blocks: list[dict]) -> dict:
-    """B12 convenience: confidence stats over a turn's block forest."""
-    return confidence_stats(blocks)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .dedup import _shingles
-from .io_util import t, t_spread
+from .io_util import materialize, overlap, t, t_spread
 from .serving import TOKEN_PATTERN
 
 # Gopher-style thresholds (arXiv 2112.11446 §A1.1 uses 0.18 for the
@@ -439,8 +439,6 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     are doc_id-keyed left joins; at 10^12 docs each stage list is a
     committed table and this query is the funnel-audit report every
     data-curation run ships with."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from .dedup import dedup_survivors
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
@@ -449,32 +447,27 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (each is its own committed table in the production DAG), but the
     # survivors branch alone serializes ~6 jobs (pair mining + CC), so
     # composed lazily the funnel ran every branch back-to-back.
-    # Materialize each list from a thread pool — gopher/temperature
+    # Materialize each list concurrently — gopher/temperature
     # back-fill the idle slots of the CC chain's barriers. Interleaved
     # A/B at sf0.1 is cited in OPTIMIZATION_r06.md; outputs identical
     # (checkpointing a drop list changes nothing downstream).
-    def _surv():
-        return dedup_survivors(spark, sf_dir).select(
-            "doc_id", F.lit(1).alias("s")
-        ).localCheckpoint(eager=True)
-
-    def _rep():
-        return (
+    lists = overlap({
+        "survivors": lambda: materialize(
+            dedup_survivors(spark, sf_dir).select("doc_id", F.lit(1).alias("s")),
+            "curation_funnel:survivors",
+        ),
+        "repetitive": lambda: materialize(
             text_gopher_quality(spark, sf_dir)
             .filter(F.col("flag_repetitive"))
-            .select("doc_id", F.lit(1).alias("r"))
-            .localCheckpoint(eager=True)
-        )
-
-    def _kept():
-        return sample_temperature(spark, sf_dir).select(
-            "doc_id", F.lit(1).alias("k")
-        ).localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        sf_, rf_, kf_ = (pool.submit(_surv), pool.submit(_rep),
-                         pool.submit(_kept))
-        surv, rep, kept = sf_.result(), rf_.result(), kf_.result()
+            .select("doc_id", F.lit(1).alias("r")),
+            "curation_funnel:repetitive",
+        ),
+        "kept": lambda: materialize(
+            sample_temperature(spark, sf_dir).select("doc_id", F.lit(1).alias("k")),
+            "curation_funnel:kept",
+        ),
+    })
+    surv, rep, kept = lists.values()
     j = (
         docs.join(surv, "doc_id", "left")
         .join(rep, "doc_id", "left")
@@ -733,9 +726,9 @@ def text_quality_lr(
     # docs_d hung off the un-materialized X, so building D0 re-ran the
     # whole tokenize→explode→md5 chain — a SECOND full corpus pass per
     # invocation just to list the doc ids.
-    cnt = feats.groupBy("doc_id", "lang", "bucket").agg(
+    cnt = materialize(feats.groupBy("doc_id", "lang", "bucket").agg(
         F.count(F.lit(1)).cast("double").alias("c")
-    ).localCheckpoint(eager=True)
+    ), "text_quality_lr:bigram_counts")
     wdoc = Window.partitionBy("doc_id")
     X = cnt.select(
         "doc_id", "lang", "bucket",
@@ -748,22 +741,16 @@ def text_quality_lr(
     # (two gradient aggs + two scoring joins each): materialize them so
     # the per-doc normalization runs ONCE, not 5×. In production these
     # are committed pipeline tables (the fixture_tokens discipline).
-    # r6: localCheckpoint instead of persist — persist registers in the
-    # session CacheManager, which matches by canonicalized PLAN, so a
-    # later invocation of the same query silently reused the previous
-    # invocation's cached features (cross-run result reuse, and a
-    # cache-retention leak across the ~90-query sweep); a checkpoint is
-    # private to this invocation.
-    Xa = X.select("doc_id", "bucket", "x").unionByName(
+    Xa = materialize(X.select("doc_id", "bucket", "x").unionByName(
         docs_d.select(
             "doc_id", F.lit("__b__").alias("bucket"), F.lit(1.0).alias("x")
         )
-    ).localCheckpoint(eager=True)
+    ), "text_quality_lr:features")
     y = F.when(F.col("lang") == target_lang, 1.0).otherwise(0.0)
     wall = Window.partitionBy()
-    D0 = docs_d.select("doc_id", "lang", y.alias("y")).withColumn(
+    D0 = materialize(docs_d.select("doc_id", "lang", y.alias("y")).withColumn(
         "n_docs", F.count(F.lit(1)).over(wall)
-    ).localCheckpoint(eager=True)
+    ), "text_quality_lr:labels")
     # iteration 1: w == 0 -> p == 0.5 exactly, no scoring join needed
     r0 = D0.select("doc_id", (F.lit(0.5) - F.col("y")).alias("r"), "n_docs")
     g1 = (
@@ -774,9 +761,9 @@ def text_quality_lr(
     # w1 feeds TWO consumers (the iteration-2 scoring broadcast and the
     # w2 weight-update join), so left lazy the g1 gradient agg ran
     # twice; the weight table is 257 rows — checkpoint it (r6)
-    w1 = g1.select(
+    w1 = materialize(g1.select(
         "bucket", F.round(F.lit(-rate) * F.col("g"), 6).alias("w")
-    ).localCheckpoint(eager=True)
+    ), "text_quality_lr:w1")
     # iteration 2: score with w1, step again
     z1 = (
         Xa.join(F.broadcast(w1), "bucket")
@@ -973,9 +960,9 @@ def decontaminate_bloom(
     # the eval-side distinct set feeds both the Bloom build and the
     # verify join → one checkpoint (the committed benchmark n-gram
     # table at scale)
-    bench_ngrams = (
-        _shingles(docs.filter(is_eval), k=k).select("shingle").distinct()
-        .localCheckpoint(eager=True)
+    bench_ngrams = materialize(
+        _shingles(docs.filter(is_eval), k=k).select("shingle").distinct(),
+        "decontaminate_bloom:bench_ngrams",
     )
     gated = _bloom_gate(corpus_ngrams, _bloom_word_table(bench_ngrams))
     hits = (

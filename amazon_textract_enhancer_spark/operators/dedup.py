@@ -35,7 +35,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io_util import t
+from .io_util import materialize, overlap, t
 from .serving import TOKEN_PATTERN
 
 N_MINHASH = 16  # signature length
@@ -131,21 +131,6 @@ def _shingle_hash_array(L_col: str = "L", k: int = 3):
         F.transform(
             F.sequence(F.lit(1), F.size(L) - (k - 1)),
             lambda i: F.xxhash64(*[F.element_at(L, i + j) for j in range(k)]),
-        )
-    )
-
-
-def _shingle_string_array(L_col: str = "L", k: int = 3):
-    """In-row expression: the DISTINCT k-token shingle STRING array of
-    one document — same values as ``_shingles``'s per-doc set, computed
-    map-side. Same bound-column contract as ``_shingle_hash_array``."""
-    L = F.col(L_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(L) - (k - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(L, i + j) for j in range(k)]
-            ),
         )
     )
 
@@ -394,7 +379,7 @@ def dedup_minhash_lsh(
           for s in range(N_MINHASH)],
         F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs"),
     ).withColumn("sz", F.size("hs"))
-    prof = prof.localCheckpoint(eager=True)
+    prof = materialize(prof, "dedup_minhash_lsh:profile")
     rpb = N_MINHASH // N_BANDS
     band_structs = [
         F.struct(
@@ -466,7 +451,6 @@ def dedup_minhash_lsh(
 # groups are capped + audited exactly like LSH.
 SIMHASH_BITS = 64
 SIMHASH_BLOCKS = 8
-SIMHASH_BLOCK_BITS = SIMHASH_BITS // SIMHASH_BLOCKS
 SIMHASH_HAMMING_MAX = 3  # cluster-form verify radius
 SIMHASH_PROBE_BLOCKS = 4  # guarantee radius = BLOCKS - PROBE_BLOCKS = 4
 # loose exact-hamming pre-filter for the jaccard-verified pairs path
@@ -582,14 +566,14 @@ def simhash_candidates(fp: DataFrame, *, bucket_cap: int = BAND_BUCKET_CAP,
     |bucket|² candidates; identical-doc floods are exact-dedup's job);
     ``simhash_hot_buckets`` audits the drop.
 
-    The banded fingerprint table is materialized once
-    (localCheckpoint): it feeds both the hot-bucket audit and the
-    self-join, and recomputing it would re-run the full token scan +
-    64-bit majority aggregation twice. It is 4 narrow rows per doc —
-    at corpus scale this is the fingerprint table a production
-    pipeline commits (TableIO) between the fingerprint and pairing
-    stages; in-plan materialization is the single-job equivalent."""
-    banded = simhash_banded(fp).localCheckpoint(eager=True)
+    The banded fingerprint table is materialized once: it feeds both
+    the hot-bucket audit and the self-join, and recomputing it would
+    re-run the full token scan + 64-bit majority aggregation twice. It
+    is 4 narrow rows per doc — at corpus scale this is the fingerprint
+    table a production pipeline commits (TableIO) between the
+    fingerprint and pairing stages; in-plan materialization is the
+    single-job equivalent."""
+    banded = materialize(simhash_banded(fp), "simhash_candidates:banded")
     kept = banded.join(
         F.broadcast(simhash_hot_buckets(banded, bucket_cap).select("band", "bucket")),
         ["band", "bucket"],
@@ -661,17 +645,14 @@ def dedup_simhash_pairs(
     metric: this is the content-verified pair list (feeds the same CC
     resolution as the other pair miners); the cluster form verifies in
     hamming space only."""
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = t(spark, sf_dir, "documents")
 
     # r6 (guide §2.4, §2.6, §5): the verify profile feeds both sides —
     # without materialization the shingle scan + distinct + aggregation
     # ran twice (column pruning blocks ReusedExchange, as in the
     # minhash ops) — AND the candidate chain's banded checkpoint is
-    # independent of it, so the two materialization jobs run from a
-    # 2-thread pool instead of back-to-back (Spark schedules concurrent
-    # jobs fine; the tail of one back-fills the other's idle slots).
+    # independent of it, so the two materialization jobs overlap
+    # instead of running back-to-back.
     # Interleaved A/B at sf0.1: serial 2.31s → overlapped 1.73s median,
     # identical output.
     def _mk_cand():
@@ -682,16 +663,13 @@ def dedup_simhash_pairs(
 
     def _mk_prof():
         sh = _shingles(docs)
-        return sh.groupBy("doc_id").agg(
+        return materialize(sh.groupBy("doc_id").agg(
             F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs"),
             F.count(F.lit(1)).alias("sz"),
-        ).localCheckpoint(eager=True)
+        ), "dedup_simhash_pairs:profile")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cand_f = pool.submit(_mk_cand)
-        prof_f = pool.submit(_mk_prof)
-        cand = cand_f.result()
-        prof = prof_f.result()
+    built = overlap({"candidates": _mk_cand, "profile": _mk_prof})
+    cand, prof = built["candidates"], built["profile"]
     pa = prof.select(
         F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")
     )
@@ -811,7 +789,8 @@ def connected_components(
     graph via Pregel-style min-label propagation: every vertex starts
     labelled with itself; each round takes the min over its own and its
     neighbors' labels; fixpoint in <= graph-diameter rounds. Lineage is
-    truncated per round (localCheckpoint) so the plan stays O(1) deep;
+    truncated per round (``materialize``) so the plan stays O(1) deep,
+    and each round releases the previous round's labels;
     the convergence check is a metadata count, not a data collect. At
     corpus scale this is the standard label-propagation CC (the
     large-star/small-star optimization halves rounds on long chains —
@@ -837,20 +816,21 @@ def connected_components(
     # materialize the edge list ONCE: it is re-joined every round, and
     # leaving it lazy would re-run the (expensive) pair-mining plan per
     # iteration
-    both = edges.select("doc_a", "doc_b").unionByName(
+    both = materialize(edges.select("doc_a", "doc_b").unionByName(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=True)
+    ), "connected_components:edges")
     if single_partition is None:
         # `both` holds two rows per undirected edge — halve before
         # comparing so the gate fires at the documented edge count
         single_partition = both.count() // 2 < small_graph_edges
     if single_partition:
         return _cc_union_find_one_task(both)
-    labels = (
+    # round_ck: the checkpoint `labels` reads, released by the next round
+    labels = round_ck = materialize(
         both.select(F.col("doc_a").alias("doc_id"))
         .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+        .withColumn("label", F.col("doc_id")),
+        "connected_components:labels",
     )
     changed = 0
     for _ in range(max_iters):
@@ -868,21 +848,21 @@ def connected_components(
         # carry the previous label through the select so the
         # convergence check is a filter+count on the checkpointed
         # round output, not an extra join against the old labels
-        new_labels = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
+        round_ck = materialize(
+            labels.join(neigh, "doc_id", "left").select(
                 "doc_id",
                 F.least(
                     F.col("label"), F.coalesce("min_neigh", F.col("label"))
                 ).alias("label"),
                 F.col("label").alias("prev_label"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "connected_components:labels",
+            replaces=round_ck,
         )
-        changed = new_labels.filter(
+        changed = round_ck.filter(
             F.col("label") != F.col("prev_label")
         ).count()
-        labels = new_labels.select("doc_id", "label")
+        labels = round_ck.select("doc_id", "label")
         if changed == 0:
             break
     if changed != 0 and strict:
@@ -972,25 +952,18 @@ def dedup_incremental(
     # once per invocation; at corpus scale they are exactly the
     # COMMITTED batch/index tables the docstring already prescribes.
     # `new` and the existing-side shingle index are independent, so
-    # their materialization jobs overlap from a 2-thread pool.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _mk_new():
-        return (
-            docs.filter(~is_existing).select("doc_id", "text")
-            .unionByName(clones)
-        ).localCheckpoint(eager=True)
-
-    def _mk_she():
-        return _shingles(existing).select(
-            F.col("doc_id").alias("old_id"), "shingle"
-        ).localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        new_f = pool.submit(_mk_new)
-        she_f = pool.submit(_mk_she)
-        new = new_f.result()
-        she = she_f.result()
+    # their materialization jobs overlap.
+    built = overlap({
+        "new": lambda: materialize(
+            docs.filter(~is_existing).select("doc_id", "text").unionByName(clones),
+            "dedup_incremental:new",
+        ),
+        "existing_shingles": lambda: materialize(
+            _shingles(existing).select(F.col("doc_id").alias("old_id"), "shingle"),
+            "dedup_incremental:existing_shingles",
+        ),
+    })
+    new, she = built["new"], built["existing_shingles"]
 
     efp = existing.select(F.col("doc_id").alias("old_id"),
                           F.md5("text").alias("fp"))
@@ -1002,9 +975,8 @@ def dedup_incremental(
     )
 
     remaining = new.join(exact.select("doc_id"), "doc_id", "left_anti")
-    shn = _shingles(remaining).select("doc_id", "shingle").localCheckpoint(
-        eager=True
-    )
+    shn = materialize(_shingles(remaining).select("doc_id", "shingle"),
+                      "dedup_incremental:new_shingles")
     # full-list sizes FIRST (exact denominators), then drop hot
     # shingles from both candidate sides
     sz_n = shn.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz_n"))
@@ -1241,7 +1213,7 @@ def dedup_minhash_portable(
     # once per invocation (the committed-signature-table analog) and
     # banding is ONE explode over 4 in-row structs instead of a 4-way
     # union; (band, bucket) values are unchanged.
-    prof = prof.localCheckpoint(eager=True)
+    prof = materialize(prof, "dedup_minhash_portable:profile")
     band_structs = [
         F.struct(
             F.lit(band).alias("band"),
@@ -1351,7 +1323,8 @@ def dedup_simhash_portable(
     # ONE posexplode over the 20 fold keys (identical band order —
     # itertools.combinations enumeration — and identical
     # base-2^block_bits key arithmetic).
-    fp = agg.select("doc_id", fp_expr.alias("fp")).localCheckpoint(eager=True)
+    fp = materialize(agg.select("doc_id", fp_expr.alias("fp")),
+                     "dedup_simhash_portable:fingerprints")
 
     mask = F.lit((1 << PSIM_BLOCK_BITS) - 1).cast("long")
     radix = 1 << PSIM_BLOCK_BITS

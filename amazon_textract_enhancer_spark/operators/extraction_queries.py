@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..fixture_cache import ensure_fixture_cache, table_path
 from ..sources.tableio import TableIO
 from ..stages import extract_blocks_long, extract_nodes_long, extract_spans
+from .io_util import materialize
 
 _CONVS_PER_SF = 4000  # sf0.01 → 40 convs
 _MIN_CONVS = 8
@@ -1008,9 +1009,9 @@ def x_tool_pagerank(spark: SparkSession, sf_dir: str,
     # unrolled round's contribution join), so left lazy it re-executed
     # per consumer. Materialize once — it is |tools|²-bounded, the
     # committed call-graph table at scale.
-    edges = x_tool_call_graph(spark, sf_dir).select(
+    edges = materialize(x_tool_call_graph(spark, sf_dir).select(
         "tool_from", "tool_to", F.col("n_transitions").alias("n")
-    ).localCheckpoint(eager=True)
+    ), "x_tool_pagerank:edges")
     nodes = (
         edges.select(F.col("tool_from").alias("tool"))
         .unionByName(edges.select(F.col("tool_to").alias("tool")))

@@ -1,8 +1,14 @@
-"""Shared table loader for the driver testdata parquet tables."""
+"""Shared table loader for the driver testdata parquet tables, and the
+one place that checkpoints DataFrames or starts threads."""
 
 from __future__ import annotations
 
+import os
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -27,12 +33,10 @@ def t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     plan is EXACTLY ``t()`` — no repartition, no cost. Only
     map-side-heavy consumers opt in (an extra exchange is pure
     overhead for cheap scans feeding an immediate aggregation)."""
-    import os
-
     df = t(spark, sf_dir, name)
     sc = spark.sparkContext
     try:
-        nbytes = os.path.getsize(f"{sf_dir}/{name}.parquet")
+        nbytes = _data_bytes(f"{sf_dir}/{name}.parquet")
     except OSError:
         return df
     try:
@@ -49,6 +53,19 @@ def t_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _data_bytes(path: str) -> int:
+    """Bytes of a table's data file, or of the part files under a table
+    directory (whose own ``getsize`` is the inode size)."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    )
+
+
 def parquet_row_count(sf_dir: str, name: str) -> int:
     """Row count of a testdata table from parquet FOOTER metadata only
     (pyarrow, no Spark job, no data pages read) — the in-sandbox
@@ -62,3 +79,56 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     import pyarrow.dataset as ds
 
     return ds.dataset(f"{sf_dir}/{name}.parquet", format="parquet").count_rows()
+
+
+def materialize(
+    df: DataFrame, label: str, replaces: DataFrame | None = None
+) -> DataFrame:
+    """Eager local checkpoint of ``df`` — the engine's only
+    materialization point, for intermediates that feed several
+    consumers or a loop. A checkpoint, never ``persist``: the session
+    CacheManager matches cached frames by plan, so a persisted frame
+    leaks results (and memory) into later invocations of the same query.
+    The job runs with description ``label``; the caller's is restored.
+
+    Retention: the returned checkpoint's blocks stay stored until the
+    JVM collects the DataFrame and ContextCleaner drops them.
+    ``replaces`` (a DataFrame this function returned earlier, which no
+    live plan reads any more, e.g. a loop's previous round) has its
+    blocks freed as soon as the new checkpoint exists."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        out = df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    if replaces is not None:
+        replaces._jdf.queryExecution().logical().rdd().unpersist(True)
+    return out
+
+
+def overlap(thunks: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run independent thunks concurrently and return ``{label:
+    result}`` in the given order; the tail of one job back-fills the
+    idle task slots of another. Each thread inherits the caller's local
+    properties (job group included) and runs with description
+    ``label``. All thunks run to the end; then the exception of the
+    first-LISTED failing thunk is raised, whichever failed first."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    spark = SparkSession.active()
+
+    def _labelled(label: str, fn: Callable[[], T]) -> Callable[[], T]:
+        def run() -> T:
+            spark.sparkContext.setJobDescription(label)
+            return fn()
+
+        # wrapped per thunk, so each thread owns its copy of the properties
+        return inheritable_thread_target(spark)(run)
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = {k: pool.submit(_labelled(k, fn)) for k, fn in thunks.items()}
+    return {k: f.result() for k, f in futures.items()}

@@ -537,7 +537,10 @@ _PPL_QUERY = f"""
 # distinct first EVAL_QLEN corpus-split tokens of docs qid < Q; tf
 # census pruned to the batch's terms; per-(qid, doc) score = 4dp round
 # of the exact DECIMAL(18,6) sum of 6dp-rounded per-term BM25
-# contributions (identical op sequence in serving.c5_search_bm25_batch)
+# contributions (identical op sequence in serving.c5_search_bm25_batch).
+# The 4dp round is taken on the DECIMAL, before the cast: Spark rounds
+# the double half up from its shortest decimal form (2.37395 → 2.3740),
+# while DuckDB's double round sees 2.373949999… and gives 2.3739.
 _BM25_BATCH_CTES = f"""
         WITH dl AS (
             SELECT doc_id,
@@ -568,10 +571,10 @@ _BM25_BATCH_CTES = f"""
             FROM dfx, stats
         ), sc AS (
             SELECT qt.qid, tf.doc_id,
-                   round(CAST(SUM(CAST(round(idf.idf * (tf.tf * 2.2)
+                   CAST(round(SUM(CAST(round(idf.idf * (tf.tf * 2.2)
                          / (tf.tf + 1.2 * (1.0 - 0.75
                             + 0.75 * dl.dl / idf.avgdl)), 6)
-                         AS DECIMAL(18,6))) AS DOUBLE), 4) AS score
+                         AS DECIMAL(18,6))), 4) AS DOUBLE) AS score
             FROM tf
             JOIN qt ON qt.term = tf.term
             JOIN idf ON idf.term = tf.term

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io_util import t
+from .io_util import materialize, overlap, t
 
 TOKEN_PATTERN = "[^a-z0-9]+"
 
@@ -695,8 +695,7 @@ EVAL_K = 10           # ranking depth for recall@k / nDCG@k
 
 def c5_search_bm25_batch(spark: SparkSession, sf_dir: str,
                          n_queries: int = EVAL_N_QUERIES,
-                         k: int = EVAL_K,
-                         materialize: bool = True) -> DataFrame:
+                         k: int = EVAL_K) -> DataFrame:
     """C5 tier (ix) — BATCH BM25 retrieval (★): score a whole query
     batch against the corpus in ONE plan instead of one job per query
     (the lexical analog of ``ann_knn_join``). Queries are known-item:
@@ -732,56 +731,31 @@ def c5_search_bm25_batch(spark: SparkSession, sf_dir: str,
     # in the r5 executed plan. They materialize once per invocation;
     # in the production/indexed form (c5_search_bm25_batch_indexed)
     # these are exactly the committed tokens/doc_lengths tables and
-    # the broadcast query batch. ``materialize=False`` keeps the whole
-    # derivation in one lazy plan so tests can assert the
-    # pre-materialization shape (semi-join pruning before the census).
-    def _mat(df):
-        return df.localCheckpoint(eager=True) if materialize else df
-
-    # dl and qterms are independent derivations: their materialization
-    # jobs overlap from a 2-thread pool (guide §2.6) instead of running
-    # back-to-back.
-    def _mk_dl():
-        return _mat(docs.select("doc_id", F.size(terms_arr).alias("dl")))
-
-    def _mk_qterms():
-        return _mat(
-            docs.filter(F.col("doc_id") < n_queries)
-            .select(
-                F.col("doc_id").alias("qid"),
-                F.explode(F.slice(terms_arr, 1, EVAL_QLEN)).alias("term"),
-            )
-            .distinct()
-        )
-
-    def _mk_tf(qt):
+    # the broadcast query batch.
+    def _mk_qterms_tf():
+        qt = materialize(docs.filter(F.col("doc_id") < n_queries).select(
+            F.col("doc_id").alias("qid"),
+            F.explode(F.slice(terms_arr, 1, EVAL_QLEN)).alias("term"),
+        ).distinct(), "c5_search_bm25_batch:qterms")
         toks = tokenize(docs, "text", ["doc_id"]).join(
             F.broadcast(qt.select("term").distinct()), "term", "left_semi"
         )
-        return _mat(
-            toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-        )
+        return qt, materialize(toks.groupBy("doc_id", "term").agg(
+            F.count(F.lit(1)).alias("tf")
+        ), "c5_search_bm25_batch:tf")
 
-    if materialize:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # r6 second sitting: tf depends on qterms but NOT on dl, so it
-        # chains behind qterms in the same thread — the tf census (the
-        # biggest of the three jobs) overlaps the dl materialization
-        # instead of serializing behind both
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            dl_f = pool.submit(_mk_dl)
-
-            def _mk_qt_tf():
-                qt = _mk_qterms()
-                return qt, _mk_tf(qt)
-
-            qt_tf_f = pool.submit(_mk_qt_tf)
-            dl = dl_f.result()
-            qterms, tf = qt_tf_f.result()
-    else:
-        dl, qterms = _mk_dl(), _mk_qterms()
-        tf = _mk_tf(qterms)
+    # dl and qterms are independent derivations, so their jobs overlap
+    # (guide §2.6). r6 second sitting: tf depends on qterms but NOT on
+    # dl, so it chains behind qterms in the same thread — the tf census
+    # (the biggest of the three jobs) overlaps the dl materialization
+    # instead of serializing behind both.
+    built = overlap({
+        "dl": lambda: materialize(docs.select(
+            "doc_id", F.size(terms_arr).alias("dl")
+        ), "c5_search_bm25_batch:dl"),
+        "qterms_tf": _mk_qterms_tf,
+    })
+    dl, (qterms, tf) = built["dl"], built["qterms_tf"]
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io_util import parquet_row_count, t, t_spread
+from .io_util import materialize, parquet_row_count, t, t_spread
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -56,7 +56,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str,
 
 
 PAIR_THRESHOLD = 0.45
-N_PAIR_BLOCKS = 8
 # r6 (guide §2.2/§5): block count derived from corpus size instead of a
 # fixed 8. A fixed count means block ROWS grow with the corpus (125M-row
 # blocks at 10^9 vectors — per-task OOM); a fixed target block size
@@ -769,10 +768,11 @@ def _lloyd_centroids(emb: DataFrame, k: int, n_iters: int) -> DataFrame:
     # the 1-row codebook is checkpointed per round (kilobytes): without
     # it each round's broadcast build re-executes every earlier round's
     # chain nested inside one deep job tree (interleaved A/B at sf0.1:
-    # ~1.7s → ~1.5s for embed_kmeans)
-    cb = seeds.groupBy().agg(
+    # ~1.7s → ~1.5s for embed_kmeans). Each round's checkpoint releases
+    # the one it was computed from.
+    cb = materialize(seeds.groupBy().agg(
         F.array_sort(F.collect_list(F.struct("cent_id", "cv"))).alias("cb")
-    ).localCheckpoint(eager=True)
+    ), "lloyd:codebook")
     for _ in range(n_iters):
         assigned = emb.crossJoin(F.broadcast(cb)).select(
             "v", _cb_assign().getField("c").alias("cluster")
@@ -785,7 +785,7 @@ def _lloyd_centroids(emb: DataFrame, k: int, n_iters: int) -> DataFrame:
         # collapse (cluster, dim, m) straight back into the 1-row
         # codebook: array_sort orders by (cluster, dim), so the
         # filter-per-cluster reshape reads means in dim order
-        cb = flat.groupBy().agg(
+        cb = materialize(flat.groupBy().agg(
             F.array_sort(
                 F.collect_list(F.struct("cluster", "dim", "m"))
             ).alias("fl")
@@ -802,7 +802,7 @@ def _lloyd_centroids(emb: DataFrame, k: int, n_iters: int) -> DataFrame:
                     ),
                 ),
             ).alias("cb")
-        ).localCheckpoint(eager=True)
+        ), "lloyd:codebook", replaces=cb)
     return cb
 
 
@@ -897,7 +897,7 @@ def dedup_semantic(
     # sides; without materialization the whole Lloyd chain + argmin
     # re-ran per side (8 parquet scans measured). One checkpoint per
     # invocation — the committed cluster-assignment table at scale.
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = materialize(assigned, "dedup_semantic:assignments")
     blocked = assigned.withColumn(
         "blk", F.pmod(F.xxhash64("vec_id"), F.lit(n_blocks)).cast("int")
     )
@@ -1304,11 +1304,12 @@ def _pq_train_codebooks_df(
     # Checkpointed per round (kilobytes): without it each round's
     # broadcast build re-executes every earlier round's chain nested
     # inside one deep job tree (interleaved A/B: ~2.0s → ~1.65s for
-    # the 2-round train at sf0.1)
-    cb = scents.groupBy().agg(
+    # the 2-round train at sf0.1). Each round's checkpoint releases
+    # the one it was computed from.
+    cb = materialize(scents.groupBy().agg(
         F.array_sort(F.collect_list(F.struct("s", "cent_id", "cv")))
         .alias("cb")
-    ).localCheckpoint(eager=True)
+    ), "pq_train:codebook")
 
     def _sub_assign(s: int) -> Column:
         # argmin code of subvector s against the row's broadcast cb —
@@ -1361,7 +1362,7 @@ def _pq_train_codebooks_df(
         # collapse (s, cluster, dim, mu) straight back into the 1-row
         # codebook: array_sort orders by (s, cluster, dim), so the
         # filter-per-(s, cluster) reshape reads means in dim order
-        cb = flat.groupBy().agg(
+        cb = materialize(flat.groupBy().agg(
             F.array_sort(
                 F.collect_list(F.struct("s", "cluster", "dim", "mu"))
             ).alias("fl")
@@ -1391,7 +1392,7 @@ def _pq_train_codebooks_df(
                     ),
                 ),
             ).alias("cb")
-        ).localCheckpoint(eager=True)
+        ), "pq_train:codebook", replaces=cb)
     # r6 (guide §2.4, §5): the trained codebook (M·K rows — kilobytes)
     # feeds every consumer through broadcast crossJoins (ADC builds it
     # twice, the distortion audit once more); without materialization

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .io_util import t
+from .io_util import materialize, t
 from .serving import TOKEN_PATTERN
 
 # deterministic stopword-hit language heuristic (mirrored in SQL)
@@ -314,14 +314,11 @@ def _bpe_train(docs, text_col: str = "text", rounds: int = 3):
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     # "cat" -> " c a t " (space-padded symbol string)
-    vocab = words.select(
+    vocab = materialize(words.select(
         "w",
         F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 ")).alias("s"),
         "c",
-    ).localCheckpoint(eager=True)  # r6: was .cache() — plan-keyed
-    # CacheManager reuse leaked across invocations; checkpoint is
-    # per-invocation (same one-materialization win inside the rounds
-    # loop, no cross-run reuse)
+    ), "bpe_train:vocab")
     merges = []
     cur = vocab
     for r in range(1, rounds + 1):
@@ -354,7 +351,8 @@ def _bpe_train(docs, text_col: str = "text", rounds: int = 3):
             F.replace("s", F.lit(f" {pair} "), F.lit(f" {merged} ")).alias("s"),
             "c",
         )
-    return merges, cur
+    # training is done: the merged table no longer needs the vocab
+    return merges, materialize(cur, "bpe_train:encode_table", replaces=vocab)
 
 
 def text_bpe_train_merges(spark, sf_dir):

@@ -35,17 +35,3 @@ def extract_rows(rows: list[dict]) -> list[dict]:
             }
         )
     return out
-
-
-def extract_pandas(pdf):
-    """pandas DataFrame of transcript rows → pandas DataFrame of spans."""
-    import pandas as pd
-
-    spans = extract_rows(pdf.to_dict("records"))
-    return pd.DataFrame(
-        spans,
-        columns=[
-            "conv_id", "turn_idx", "role", "ts", "kind",
-            "extracted_text", "tables", "forms", "counters",
-        ],
-    )

@@ -15,15 +15,13 @@ scaling-efficiency evidence (BASELINE.md protocol).
 
 The three derived stages are independent consumers of the committed
 spans table (the DAG fans out), so they run CONCURRENTLY in one
-session by default — Spark's scheduler is thread-safe and concurrent
+session — Spark's scheduler is thread-safe and concurrent
 jobs backfill each other's idle task slots, so the level's wall is
 max(stage walls), not their sum. That matters twice at scale: the
 small aggregations (conv_rollup ~5 s, corpus_stats ~8 s of
 parallelism-independent fixed cost each) hide entirely under the
 tokens build instead of adding serial Amdahl floor, and no stage's
 tail (last task of a skewed bucket write) idles the cluster.
-``concurrent_derived=False`` restores stage-at-a-time scheduling
-(useful when each stage is its own spark-submit).
 
 Cluster launch: ``spark-submit --py-files ates.zip run_pipeline.py``
 (see bench_scaling.py for the exact invocation used in-sandbox). In
@@ -36,10 +34,11 @@ makes the split safe.
 from __future__ import annotations
 
 import time as _time
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.io_util import overlap
 from .operators.scale import salted_conv_rollup
 from .operators.serving import term_frequencies
 from .sources.tableio import TableIO, snapshot_id_of
@@ -58,7 +57,6 @@ def run_extraction_pipeline(
     stages: list[str] | None = None,
     retain_snapshots: int = 0,
     sort_tokens: bool = False,
-    concurrent_derived: bool = True,
 ) -> dict:
     """Run (or resume) the pipeline; returns manifests per stage plus a
     ``_stage_seconds`` timing map (per-stage wall, for the
@@ -262,14 +260,7 @@ def run_extraction_pipeline(
 
     if derived:
         _t_level = _time.monotonic()
-        if concurrent_derived and len(derived) > 1:
-            with ThreadPoolExecutor(max_workers=len(derived)) as pool:
-                futures = [pool.submit(_timed, s) for s in derived]
-            for f in futures:
-                f.result()  # surface the first stage failure
-        else:
-            for s in derived:
-                _timed(s)
+        overlap({s: partial(_timed, s) for s in derived})
         stage_seconds["derived_level"] = round(_time.monotonic() - _t_level, 2)
 
     manifests["_stage_seconds"] = stage_seconds

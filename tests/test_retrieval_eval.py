@@ -7,7 +7,9 @@ in test_oracle_parity (all three ops have full DuckDB twins).
 
 from __future__ import annotations
 
+import importlib.util
 import math
+import pathlib
 
 from pyspark.sql import functions as F
 
@@ -76,15 +78,44 @@ def test_summary_equals_per_query_means(spark):
     assert 0.0 < s.recall_at_k < 1.0
 
 
-def test_batch_plan_broadcasts_batch_and_prunes_postings(spark):
+def test_batch_equals_twin_on_decimal_half_ties(spark, tmp_path):
+    """On this seeded corpus several (qid, doc) score sums lie exactly
+    on a 4-dp half (e.g. 2.37395): the DuckDB twin must round the exact
+    DECIMAL sum the way Spark rounds the score (half up), row for
+    row."""
+    import duckdb
+
+    from amazon_textract_enhancer_spark.operators.registry import ORACLE_SQL
+
+    src = pathlib.Path(__file__).resolve().parent.parent / "perfbench" / "inputs.py"
+    spec = importlib.util.spec_from_file_location("perfbench_inputs", src)
+    inputs = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(inputs)
+    inputs.write_documents(12, 500, str(tmp_path / "documents.parquet"))
+
+    got = [tuple(r) for r in S.c5_search_bm25_batch(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path}/documents.parquet')"
+        )
+        want = con.execute(ORACLE_SQL["c5_search_bm25_batch"]).fetchall()
+    finally:
+        con.close()
+    assert sorted(got) == sorted(want)
+
+
+def test_batch_plan_broadcasts_batch_and_prunes_postings(spark, monkeypatch):
     """Scale shape: the (qid, term) batch and the idf table enter as
     broadcasts (≥2 broadcast joins), the tf census is LeftSemi-pruned
     to the batch's terms BEFORE aggregation, and nothing in the plan
     is a cartesian/nested-loop product."""
-    # materialize=False keeps the derivation in one lazy plan (the r6
-    # registry form checkpoints dl/qterms/tf, which would hide the
+    # an identity materialize keeps the derivation in one lazy plan
+    # (the registry form checkpoints dl/qterms/tf, which would hide the
     # semi-join inside the materialization job)
-    df = S.c5_search_bm25_batch(spark, SF_DIR, materialize=False)
+    monkeypatch.setattr(S, "materialize", lambda df, label, replaces=None: df)
+    df = S.c5_search_bm25_batch(spark, SF_DIR)
     plan = executed_plan(df)
     assert n_broadcast_joins(df) >= 2, plan
     assert "LeftSemi" in plan, plan
