@@ -6,15 +6,16 @@ Architecture (see SURVEY.md):
 
 - ``core/``       pure-Python extraction core — NO Spark imports. Shared
                   verbatim by the single-node oracle (``oracle.py``) and
-                  the Spark pandas-UDF stages (``stages.py``) so per-turn
+                  the Spark ``mapInArrow`` stage (``stages.py``) so per-turn
                   text equality between the two is by construction.
 - ``schemas.py``  every StructType (BLOCK, NODE, TABLE_SPAN, KV_SPAN,
                   extracted_spans) + the Textract enum constants from
                   ``vendor/textract-service-2.json``.
 - ``fixtures.py`` deterministic synthetic transcript generator
                   (FIXTURES.md §1), seed-fixed, no wall clock.
-- ``stages.py``   the fused ``mapInPandas`` extraction stage and the
-                  exploded nodes/blocks stages.
+- ``stages.py``   the one fused ``mapInArrow`` extraction pass (spans,
+                  plus per-turn block/node arrays that Catalyst
+                  ``inline``s into the long blocks/nodes tables).
 - ``operators/``  relational (Catalyst-planned) forms of the SURVEY.md §2
                   operator inventory, plus training-data-pipeline
                   operators (dedup, similarity, text stats, multimodal).

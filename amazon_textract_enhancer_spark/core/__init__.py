@@ -1,8 +1,8 @@
 """Pure-Python extraction core. NO Spark imports anywhere under core/.
 
 This package is imported both by the single-node oracle
-(``amazon_textract_enhancer_spark.oracle``) and by the Spark pandas-UDF
-stages (``amazon_textract_enhancer_spark.stages``), so the two can never
+(``amazon_textract_enhancer_spark.oracle``) and by the Spark ``mapInArrow``
+stage (``amazon_textract_enhancer_spark.stages``), so the two can never
 drift (SURVEY.md §7.3 item 2).
 """
 

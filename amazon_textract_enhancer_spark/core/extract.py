@@ -2,7 +2,7 @@
 
 One pure function ``extract_turn(key, text)`` is the unit of work. It is
 called per row by BOTH the single-node oracle and the Spark
-``mapInPandas`` stage — JVM↔Python Arrow cost is paid once per batch,
+``mapInArrow`` stage — JVM↔Python Arrow cost is paid once per batch,
 and oracle↔pipeline equality is by construction (SURVEY.md §3.1, §7.3).
 
 The per-turn skip/quarantine rule (D6): malformed or empty payloads

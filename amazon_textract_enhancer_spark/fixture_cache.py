@@ -16,11 +16,14 @@ corpus, both idempotent:
    not just relational algebra.
 
 2. **Spark-committed tables** (``extraction_queries.fixture_spans`` /
-   ``fixture_blocks`` / ``fixture_nodes``): the distributed extraction
-   stages run ONCE per (seed, sf) and commit via TableIO (bucketed by
-   conv_id, manifest resume) — every downstream ``x_*`` query reads the
-   committed table instead of re-extracting the corpus per registry
-   entry (r2 re-ran extract_spans up to 15x per sweep).
+   ``fixture_blocks`` / ``fixture_nodes``): ONE distributed extraction
+   pass per (seed, sf) — one ``extract_turn`` per turn, emitting the
+   spans fields plus the turn's block and node arrays — is checkpointed
+   and commits all three tables via TableIO (bucketed by conv_id,
+   manifest resume); the long tables are Catalyst ``inline``s of the
+   arrays. Every downstream ``x_*`` query reads the committed table
+   instead of re-extracting the corpus per registry entry (r2 re-ran
+   extract_spans up to 15x per sweep).
 
 The cache write is crash-safe and versioned: files are staged in a
 writer-unique tmp dir, then published into the cache dir one atomic
@@ -148,8 +151,8 @@ def ensure_fixture_cache(n_convs: int) -> str:
     ordered = sorted(rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
 
     # one extract_turn per row feeds spans AND the blocks/nodes long
-    # tables (same decomposition as oracle.extract_rows + the exploded
-    # Spark stages, single pass)
+    # tables (same decomposition as oracle.extract_rows + the Spark
+    # extraction pass and its inlined long tables)
     spans: list[dict] = []
     blocks_rows: list[dict] = []
     nodes_rows: list[dict] = []

@@ -3,10 +3,10 @@ path over the north-rule transcript table.
 
 Since round 3 the fixture corpus is COMMITTED, not per-query-generated
 (VERDICT r2 item 4): the deterministic (seed=42) transcripts live in a
-pure-Python parquet cache (``fixture_cache``), the Spark extraction
-stages run ONCE per (seed, sf) and commit ``extracted_spans`` /
-``blocks_long`` / ``nodes_long`` via TableIO (manifest resume, bucketed
-by conv_id), and every query below reads the committed table. The same
+pure-Python parquet cache (``fixture_cache``); ONE Spark extraction
+pass per (seed, sf) commits ``extracted_spans`` / ``blocks_long`` /
+``nodes_long`` via TableIO (``_extraction``: manifest resume,
+bucketed by conv_id), and every query below reads them. The same
 cache also holds the single-node-oracle outputs, which the DuckDB twins
 in ``registry.ORACLE_SQL`` read via ``read_parquet`` — so most of these
 queries are now full-oracle (★), pinning Spark extraction ==
@@ -20,19 +20,21 @@ conversations, sf0.1 → 400, always seed-42 deterministic.
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fixture_cache import ensure_fixture_cache, table_path
+from ..fixture_cache import WHALE_CAP, cache_dir, ensure_fixture_cache, table_path
 from ..sources.tableio import TableIO
-from ..stages import extract_blocks_long, extract_nodes_long, extract_spans
-from .io_util import materialize
+from ..stages import extract_turns, long_table
+from .io_util import materialize, release
 
 _CONVS_PER_SF = 4000  # sf0.01 → 40 convs
 _MIN_CONVS = 8
 _FIXTURE_CFG = "xfixture-v3"
+_FIXTURE_BUCKETS = 8
 
 
 def n_convs_for(sf_dir: str) -> int:
@@ -60,35 +62,25 @@ def fixture_transcripts(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     if n <= _DISTRIBUTED_GEN_MIN_CONVS:
         ensure_fixture_cache(n)
         return spark.read.parquet(table_path(n, "transcripts"))
-    from ..fixture_cache import WHALE_CAP
     from ..fixtures import generate_transcripts_distributed
 
-    io, snapshot = _fixture_io(n)
-    if not io.is_committed("transcripts", snapshot, _FIXTURE_CFG):
-        io.commit_stage(
-            generate_transcripts_distributed(spark, n, whale_cap=WHALE_CAP),
-            "transcripts", snapshot, _FIXTURE_CFG,
-            bucket_col="conv_id", n_buckets=16,
-        )
-    return io.read_table(spark, "transcripts")
+    return _committed(spark, sf_dir, "transcripts", lambda commit: commit(
+        generate_transcripts_distributed(spark, n, whale_cap=WHALE_CAP),
+        "transcripts", bucket_col="conv_id", n_buckets=16,
+    ))
 
 
 def _fixture_io(n_convs: int) -> tuple[TableIO, str]:
-    import os
-
-    from ..fixture_cache import cache_dir
-
     return (
         TableIO(os.path.join(cache_dir(n_convs), "warehouse")),
         f"fixture-seed42-n{n_convs}",
     )
 
 
-def _committed(spark: SparkSession, sf_dir: str, name: str, stage_fn,
-               **commit_kw) -> DataFrame:
-    """Run a Spark extraction stage over the fixture transcripts ONCE
-    per (seed, sf) and commit it via TableIO (manifest resume); every
-    caller afterwards reads the committed parquet. This is the
+def _committed(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+    """Fixture table ``name`` for this (seed, sf), read from TableIO. If it
+    is not committed yet, ``build(commit)`` first passes each table it
+    makes to ``commit(df, table, **commit_stage_kwargs)``. This is the
     production shape too: extraction is a committed pipeline stage, and
     serving queries read the table, not the UDF."""
     n = n_convs_for(sf_dir)
@@ -99,26 +91,44 @@ def _committed(spark: SparkSession, sf_dir: str, name: str, stage_fn,
         ensure_fixture_cache(n)
     io, snapshot = _fixture_io(n)
     if not io.is_committed(name, snapshot, _FIXTURE_CFG):
-        io.commit_stage(
-            stage_fn(fixture_transcripts(spark, sf_dir)), name, snapshot,
-            _FIXTURE_CFG, **commit_kw,
-        )
+        build(lambda df, table, **kw: io.commit_stage(
+            df, table, snapshot, _FIXTURE_CFG, **kw))
     return io.read_table(spark, name)
 
 
+def _extraction(spark: SparkSession, sf_dir: str):
+    """The ``_committed`` build of the fixture's one extraction pass, with
+    the exchange BELOW the UDF (pipeline stage 1's shape): bucket the raw
+    transcripts by conv_id, extract spans plus block/node arrays once,
+    checkpoint, commit the three tables map-side, then free the
+    checkpoint."""
+
+    def build(commit) -> None:
+        src = fixture_transcripts(spark, sf_dir).repartition(
+            _FIXTURE_BUCKETS, "conv_id")
+        turns = materialize(extract_turns(src), "fixture:extract")
+        try:
+            for table, df in (("extracted_spans", turns.drop("blocks", "nodes")),
+                              ("blocks_long", long_table(turns, "blocks")),
+                              ("nodes_long", long_table(turns, "nodes"))):
+                commit(df, table, bucket_col="conv_id",
+                       n_buckets=_FIXTURE_BUCKETS, pre_bucketed=True)
+        finally:
+            release(turns)
+
+    return build
+
+
 def fixture_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _committed(spark, sf_dir, "extracted_spans", extract_spans,
-                      bucket_col="conv_id", n_buckets=8)
+    return _committed(spark, sf_dir, "extracted_spans", _extraction(spark, sf_dir))
 
 
 def fixture_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _committed(spark, sf_dir, "blocks_long", extract_blocks_long,
-                      bucket_col="conv_id", n_buckets=8)
+    return _committed(spark, sf_dir, "blocks_long", _extraction(spark, sf_dir))
 
 
 def fixture_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _committed(spark, sf_dir, "nodes_long", extract_nodes_long,
-                      bucket_col="conv_id", n_buckets=8)
+    return _committed(spark, sf_dir, "nodes_long", _extraction(spark, sf_dir))
 
 
 def fixture_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,18 +138,11 @@ def fixture_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-tokenize documents (VERDICT r3 item 5)."""
     from .serving import term_frequencies
 
-    n = n_convs_for(sf_dir)
-    if n <= _DISTRIBUTED_GEN_MIN_CONVS:
-        ensure_fixture_cache(n)
-    io, snapshot = _fixture_io(n)
-    if not io.is_committed("tokens", snapshot, _FIXTURE_CFG):
-        io.commit_stage(
-            term_frequencies(fixture_spans(spark, sf_dir), "extracted_text",
-                             ["conv_id", "turn_idx"]),
-            "tokens", snapshot, _FIXTURE_CFG,
-            bucket_col="term", n_buckets=8,
-        )
-    return io.read_table(spark, "tokens")
+    return _committed(spark, sf_dir, "tokens", lambda commit: commit(
+        term_frequencies(fixture_spans(spark, sf_dir), "extracted_text",
+                         ["conv_id", "turn_idx"]),
+        "tokens", bucket_col="term", n_buckets=_FIXTURE_BUCKETS,
+    ))
 
 
 def fixture_query_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,11 +155,8 @@ def fixture_query_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same committed-fixture discipline as spans/blocks/nodes."""
     from ..sources.blockjson import parse_response_chunks
 
-    n = n_convs_for(sf_dir)
-    if n <= _DISTRIBUTED_GEN_MIN_CONVS:
-        ensure_fixture_cache(n)
-    io, snapshot = _fixture_io(n)
-    if not io.is_committed("query_blocks", snapshot, _FIXTURE_CFG):
+    def build(commit) -> None:
+        n = n_convs_for(sf_dir)
         if n <= _DISTRIBUTED_GEN_MIN_CONVS:
             resp = spark.read.parquet(table_path(n, "responses"))
         else:
@@ -165,11 +165,10 @@ def fixture_query_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
             resp = generate_query_responses_distributed(
                 spark, fixture_transcripts(spark, sf_dir)
             )
-        io.commit_stage(
-            parse_response_chunks(resp), "query_blocks", snapshot,
-            _FIXTURE_CFG, bucket_col="conv_id", n_buckets=8,
-        )
-    return io.read_table(spark, "query_blocks")
+        commit(parse_response_chunks(resp), "query_blocks",
+               bucket_col="conv_id", n_buckets=_FIXTURE_BUCKETS)
+
+    return _committed(spark, sf_dir, "query_blocks", build)
 
 
 def x_query_answers(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -91,11 +91,11 @@ def materialize(
     leaks results (and memory) into later invocations of the same query.
     The job runs with description ``label``; the caller's is restored.
 
-    Retention: the returned checkpoint's blocks stay stored until the
-    JVM collects the DataFrame and ContextCleaner drops them.
-    ``replaces`` (a DataFrame this function returned earlier, which no
-    live plan reads any more, e.g. a loop's previous round) has its
-    blocks freed as soon as the new checkpoint exists."""
+    Retention: the returned checkpoint's blocks stay stored until
+    ``release`` frees them, or the JVM collects the DataFrame and
+    ContextCleaner drops them. ``replaces`` (a DataFrame this function
+    returned earlier, which no live plan reads any more, e.g. a loop's
+    previous round) is released as soon as the new checkpoint exists."""
     sc = df.sparkSession.sparkContext
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(label)
@@ -104,8 +104,14 @@ def materialize(
     finally:
         sc.setLocalProperty("spark.job.description", prev)
     if replaces is not None:
-        replaces._jdf.queryExecution().logical().rdd().unpersist(True)
+        release(replaces)
     return out
+
+
+def release(df: DataFrame) -> None:
+    """Free the stored blocks of a checkpoint ``materialize`` returned;
+    no live plan may read it any more."""
+    df._jdf.queryExecution().logical().rdd().unpersist(True)
 
 
 def overlap(thunks: dict[str, Callable[[], T]]) -> dict[str, T]:

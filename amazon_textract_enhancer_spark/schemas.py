@@ -188,6 +188,16 @@ NODES_LONG_SCHEMA = StructType(
     + list(NODE_SCHEMA.fields)
 )
 
+# one extraction pass, three tables: the spans fields plus each turn's
+# Block forest and DOM nodes, which ``stages.long_table`` inlines into
+# BLOCKS_LONG_SCHEMA / NODES_LONG_SCHEMA (non-null elements, so the
+# inlined fields keep their nullability)
+EXTRACTED_TURNS_SCHEMA = StructType(
+    list(EXTRACTED_SPANS_SCHEMA.fields)
+    + [StructField("blocks", ArrayType(BLOCK_SCHEMA, False), True),
+       StructField("nodes", ArrayType(NODE_SCHEMA, False), True)]
+)
+
 # tokens inverted-index table (A9/C5-ii): (term, conv_id, turn_idx, tf)
 TOKENS_SCHEMA = StructType(
     [

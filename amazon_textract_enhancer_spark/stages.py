@@ -20,7 +20,9 @@ arrays — zero copies, zero type drift.
 Everything delegates per-turn work to ``core.extract_turn`` — the same
 function the single-node oracle runs — so there is no per-row Python
 at the Spark API level (BASELINE.json:15) and oracle equality is by
-construction.
+construction. It is called at one site, ``extract_stage``: the spans,
+blocks_long and nodes_long tables are column choices and Catalyst
+``inline``s over that one pass, never separate passes.
 """
 
 from __future__ import annotations
@@ -28,13 +30,13 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .core import extract_turn
-from .schemas import (
-    BLOCKS_LONG_SCHEMA,
-    EXTRACTED_SPANS_SCHEMA,
-    NODES_LONG_SCHEMA,
-)
+from .schemas import EXTRACTED_SPANS_SCHEMA, EXTRACTED_TURNS_SCHEMA
+
+# forwarded from the input batch when present, else all-null
+_PASSTHROUGH = ("conv_id", "turn_idx", "role", "ts")
 
 
 def _arrow_schema(spark_schema):
@@ -43,67 +45,56 @@ def _arrow_schema(spark_schema):
     return to_arrow_schema(spark_schema)
 
 
-def extract_spans(transcripts: DataFrame) -> DataFrame:
-    """The fused extraction stage: transcripts → extracted_spans.
-
-    One ``mapInArrow`` node; output schema EXTRACTED_SPANS_SCHEMA
-    (narrow columns: metrics queries never deserialize ``tables``).
-    """
+def extract_stage(transcripts: DataFrame, out_schema) -> DataFrame:
+    """The one extraction pass: ``core.extract_turn`` once per turn in
+    one ``mapInArrow`` node. Every non-passthrough field of
+    ``out_schema`` is the ``extract_turn`` result key of the same name
+    (``blocks`` de-normalized by ``_block_to_row``), so the schema alone
+    picks the columns: EXTRACTED_SPANS_SCHEMA for the spans table,
+    EXTRACTED_TURNS_SCHEMA when the same pass also feeds the long
+    blocks/nodes tables."""
     import pyarrow as pa
 
-    has_role = "role" in transcripts.columns
-    has_ts = "ts" in transcripts.columns
-    cols = ["conv_id", "turn_idx"] + (["role"] if has_role else []) + (
-        ["ts"] if has_ts else []
-    ) + ["text"]
-    src = transcripts.select(*cols)
-
-    out_schema = EXTRACTED_SPANS_SCHEMA
+    passthrough = [c for c in _PASSTHROUGH if c in transcripts.columns]
+    src = transcripts.select(*passthrough, "text")
     arrow_out = _arrow_schema(out_schema)
-    t_tables = arrow_out.field("tables").type
-    t_forms = arrow_out.field("forms").type
-    t_counters = arrow_out.field("counters").type
+    derived = [f.name for f in out_schema.fields if f.name not in _PASSTHROUGH]
+    want_blocks = "blocks" in derived
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            conv = rb.column(rb.schema.get_field_index("conv_id"))
-            turn = rb.column(rb.schema.get_field_index("turn_idx"))
-            texts = rb.column(rb.schema.get_field_index("text")).to_pylist()
-            keys_c = conv.to_pylist()
-            keys_t = turn.to_pylist()
-            n = len(texts)
-            kinds, main, tables, forms, counters = [], [], [], [], []
-            for kc, kt, tx in zip(keys_c, keys_t, texts):
+            values: dict[str, list] = {name: [] for name in derived}
+            for kc, kt, tx in zip(
+                rb.column("conv_id").to_pylist(),
+                rb.column("turn_idx").to_pylist(),
+                rb.column("text").to_pylist(),
+            ):
                 res = extract_turn(f"{kc}|{kt}", tx)
-                kinds.append(res["kind"])
-                main.append(res["extracted_text"])
-                tables.append(res["tables"])
-                forms.append(res["forms"])
-                counters.append(res["counters"])
-            if has_role:
-                role = rb.column(rb.schema.get_field_index("role"))
-            else:
-                role = pa.nulls(n, pa.string())
-            if has_ts:
-                ts = rb.column(rb.schema.get_field_index("ts"))
-            else:
-                ts = pa.nulls(n, arrow_out.field("ts").type)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    conv,
-                    turn,
-                    role,
-                    ts.cast(arrow_out.field("ts").type),
-                    pa.array(kinds, pa.string()),
-                    pa.array(main, pa.string()),
-                    pa.array(tables, t_tables),
-                    pa.array(forms, t_forms),
-                    pa.array(counters, t_counters),
-                ],
-                names=[f.name for f in out_schema.fields],
-            )
+                if want_blocks:
+                    res["blocks"] = [_block_to_row(b) for b in res["blocks"]]
+                for name, vals in values.items():
+                    vals.append(res[name])
+            arrays = [
+                pa.array(values[f.name], f.type) if f.name in values
+                else rb.column(f.name).cast(f.type) if f.name in passthrough
+                else pa.nulls(rb.num_rows, f.type)
+                for f in arrow_out
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, names=arrow_out.names)
 
     return src.mapInArrow(fn, out_schema)
+
+
+def extract_spans(transcripts: DataFrame) -> DataFrame:
+    """The fused extraction stage: transcripts → extracted_spans
+    (narrow columns: metrics queries never deserialize ``tables``)."""
+    return extract_stage(transcripts, EXTRACTED_SPANS_SCHEMA)
+
+
+def extract_turns(transcripts: DataFrame) -> DataFrame:
+    """The same pass, also carrying each turn's Block forest and DOM
+    nodes: the one input of extracted_spans, blocks_long and nodes_long."""
+    return extract_stage(transcripts, EXTRACTED_TURNS_SCHEMA)
 
 
 def _block_to_row(b: dict) -> dict:
@@ -143,49 +134,19 @@ def _block_to_row(b: dict) -> dict:
     }
 
 
-def _exploded_stage(transcripts: DataFrame, spark_schema, rows_of) -> DataFrame:
-    """Shared shape for the exploded blocks/nodes long tables."""
-    import pyarrow as pa
-
-    src = transcripts.select("conv_id", "turn_idx", "text")
-    arrow_out = _arrow_schema(spark_schema)
-    names = [f.name for f in spark_schema.fields]
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            convs = rb.column(0).to_pylist()
-            turns = rb.column(1).to_pylist()
-            texts = rb.column(2).to_pylist()
-            rows: list[dict] = []
-            for kc, kt, tx in zip(convs, turns, texts):
-                res = extract_turn(f"{kc}|{kt}", tx)
-                for row in rows_of(res):
-                    row["conv_id"] = kc
-                    row["turn_idx"] = kt
-                    rows.append(row)
-            arrays = [
-                pa.array([r.get(name) for r in rows], arrow_out.field(name).type)
-                for name in names
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return src.mapInArrow(fn, spark_schema)
+def long_table(turns: DataFrame, field: str) -> DataFrame:
+    """One row per element of an EXTRACTED_TURNS_SCHEMA array column
+    (``blocks`` → BLOCKS_LONG_SCHEMA, ``nodes`` → NODES_LONG_SCHEMA): a
+    Catalyst ``inline``, no Python."""
+    return turns.select("conv_id", "turn_idx", F.inline(field))
 
 
 def extract_blocks_long(transcripts: DataFrame) -> DataFrame:
     """Exploded long-format ``blocks`` table (SURVEY.md §1.4 (b)):
     one row per synthesized Block, for relational B1–B12 queries."""
-
-    def rows_of(res: dict):
-        return (_block_to_row(b) for b in res["blocks"])
-
-    return _exploded_stage(transcripts, BLOCKS_LONG_SCHEMA, rows_of)
+    return long_table(extract_turns(transcripts), "blocks")
 
 
 def extract_nodes_long(transcripts: DataFrame) -> DataFrame:
     """Exploded long-format DOM ``nodes`` table for relational D3/D4."""
-
-    def rows_of(res: dict):
-        return (dict(nd) for nd in res["nodes"])
-
-    return _exploded_stage(transcripts, NODES_LONG_SCHEMA, rows_of)
+    return long_table(extract_turns(transcripts), "nodes")

@@ -11,7 +11,7 @@ and a Lambda post-processes just that document. Our equivalents:
 
 2. ``stream_extract`` — Structured Streaming ``availableNow`` shape for
    file-arrival pipelines: readStream over a transcript directory →
-   the same fused extraction stage (mapInPandas works on streaming
+   the same fused extraction stage (mapInArrow works on streaming
    DataFrames) → parquet sink with checkpointLocation. Exactly-once
    via the streaming commit log.
 """

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
+
 from amazon_textract_enhancer_spark import fixture_cache as fc
 
 SF_DIR = "/root/testdata/sf0.01"  # → n_convs 40
@@ -46,21 +48,67 @@ def test_cache_content_matches_oracle_extraction():
 
 
 def test_committed_spans_resume_no_reextraction(spark, monkeypatch):
-    """The second fixture_spans call for the same (seed, sf) must hit
-    the TableIO manifest and NEVER re-run the extraction stage."""
+    """Later fixture_spans / fixture_blocks / fixture_nodes calls for the
+    same (seed, sf) must hit the TableIO manifests and NEVER re-run the
+    extraction stage."""
     from amazon_textract_enhancer_spark.operators import extraction_queries as xq
 
-    n1 = xq.fixture_spans(spark, SF_DIR).count()  # ensures the commit
+    fixtures = (xq.fixture_spans, xq.fixture_blocks, xq.fixture_nodes)
+    n1 = [f(spark, SF_DIR).count() for f in fixtures]  # ensures the commits
 
     def boom(*a, **k):
         raise AssertionError("extract stage re-ran despite committed manifest")
 
     monkeypatch.setattr(
-        "amazon_textract_enhancer_spark.operators.extraction_queries.extract_spans",
+        "amazon_textract_enhancer_spark.operators.extraction_queries.extract_turns",
         boom,
     )
-    n2 = xq.fixture_spans(spark, SF_DIR).count()
-    assert n1 == n2 == 900
+    n2 = [f(spark, SF_DIR).count() for f in fixtures]
+    assert n1 == n2
+    assert n1[0] == 900
+
+
+def test_cold_fixture_build_extracts_once(spark, monkeypatch, tmp_path):
+    """A cold build of all three extraction tables runs ONE extraction
+    pass (one mapInArrow), not one per table, and frees its checkpoint."""
+    from amazon_textract_enhancer_spark.operators import extraction_queries as xq
+
+    def stored() -> set[int]:
+        return {int(i.id()) for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    monkeypatch.setattr(fc, "CACHE_ROOT", str(tmp_path / "cache"))
+    sf_dir = "sf0.002"  # n_convs_for → 8
+    fc.ensure_fixture_cache(8)
+    before = stored()
+    cls = type(spark.range(1))
+    orig = cls.mapInArrow
+    calls = []
+
+    def spy(self, *a, **k):
+        calls.append(1)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(cls, "mapInArrow", spy)
+    counts = [f(spark, sf_dir).count()
+              for f in (xq.fixture_spans, xq.fixture_blocks, xq.fixture_nodes)]
+    assert len(calls) == 1
+    assert stored() <= before
+    want = {t: len(pq.read_table(fc.table_path(8, t)))
+            for t in ("spans", "blocks", "nodes")}
+    assert counts == [want["spans"], want["blocks"], want["nodes"]]
+
+
+def test_committed_long_tables_equal_oracle(spark):
+    """The committed blocks_long / nodes_long are full-row equal (as
+    multisets) to the pure-Python reference tables the oracle writes."""
+    from amazon_textract_enhancer_spark.operators import extraction_queries as xq
+
+    for build, table in ((xq.fixture_blocks, "blocks"), (xq.fixture_nodes, "nodes")):
+        got = build(spark, SF_DIR)
+        want = spark.read.parquet(fc.table_path(40, table)).select(*got.columns)
+        assert got.count() == want.count() > 0, table
+        assert got.exceptAll(want).count() == 0, table
+        assert want.exceptAll(got).count() == 0, table
 
 
 def test_cold_start_with_preexisting_warehouse(spark, monkeypatch, tmp_path):

@@ -42,3 +42,43 @@ def test_extract_never_raises_on_markup_soup(text):
     res = extract_turn("fuzz|1", text)
     assert isinstance(res["extracted_text"], str)
     assert res["counters"]["skipped"] in (True, False)
+
+
+def test_hostile_payloads_through_spark_stages(spark):
+    """The same quarantine contract one level up: hostile payloads go
+    through all three Spark extraction tables without failing the job,
+    empty ones are marked skipped, and the long tables hold exactly the
+    blocks/nodes the core emits for each turn."""
+    from amazon_textract_enhancer_spark.stages import (
+        extract_blocks_long,
+        extract_nodes_long,
+        extract_spans,
+    )
+
+    payloads = [
+        None,
+        "",
+        "   \n\t  ",
+        "\x00\xff\xfe\x01garbage\x7f" * 50,
+        "<html><body><div><p>unclosed <b>bold <table><tr><td>cell",
+        "x=50 y=20 page=1 | Name: Ann\nx=oops y=1 page=1 | bad\nnot layout\n"
+        "x=50 y=32 page=1 | Total: 3",
+        "x" * 100_000,
+        "<html><body><p>ok</p><table><tr><td>a</td><td>b</td></tr></table></body></html>",
+    ]
+    rows = [("hostile", i, "user", tx) for i, tx in enumerate(payloads)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, text string")
+
+    spans = {r["turn_idx"]: r for r in extract_spans(df).collect()}
+    assert sorted(spans) == list(range(len(payloads)))
+    for i in (0, 1):
+        assert spans[i]["counters"]["skipped"] is True
+        assert spans[i]["counters"]["skip_reason"]
+    assert spans[5]["kind"] == "layout"
+    assert spans[5]["counters"]["skip_reason"] == "layout:2-malformed-lines"
+
+    for build, key in ((extract_blocks_long, "blocks"), (extract_nodes_long, "nodes")):
+        got = {r["turn_idx"]: r["n"] for r in
+               build(df).groupBy("turn_idx").count().withColumnRenamed("count", "n").collect()}
+        want = {i: len(extract_turn(f"hostile|{i}", tx)[key]) for i, tx in enumerate(payloads)}
+        assert {i: got.get(i, 0) for i in want} == want, key

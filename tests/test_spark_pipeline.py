@@ -112,10 +112,30 @@ def test_nodes_long_table(spark, transcripts_df, golden_spans):
 
 
 def test_extract_plan_shape(transcripts_df):
-    """The fused stage is ONE Python eval node and no shuffle."""
-    plan = extract_spans(transcripts_df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 1
-    assert "Exchange" not in plan  # extraction is shuffle-free
+    """Each extraction table is ONE Python eval node and no shuffle: the
+    long tables are Catalyst ``inline``s over the same single pass."""
+    for build in (extract_spans, extract_blocks_long, extract_nodes_long):
+        plan = build(transcripts_df)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, build.__name__
+        assert "Exchange" not in plan, build.__name__  # extraction is shuffle-free
+
+
+def test_extract_turn_called_at_one_site():
+    """One extraction pass: ``extract_turn`` has a single call site in
+    the Spark stages; the only others are the pure-Python reference
+    paths (single-node oracle, fixture cache writer)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "amazon_textract_enhancer_spark"
+    sites = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", getattr(node.func, "attr", None)) == "extract_turn"
+    ]
+    assert sorted(sites) == ["fixture_cache.py", "oracle.py", "stages.py"], sites
 
 
 def test_distributed_generator_partition_agnostic(spark):
