@@ -19,8 +19,9 @@ ElasticSearch sink implies downstream:
   shuffle of the main index;
 - **compaction** — periodically folds delta into main (ONE rewrite,
   amortized over many refreshes) and resets delta/stale; the BM25
-  corpus statistics (stage 4) are recommitted from the merged
-  doc_lengths in the same pass.
+  corpus statistics (stage 4) are recommitted in the same pass, read
+  off the manifest of the merged doc_lengths commit (its row count and
+  summed ``dl`` lineage counter) rather than by re-scanning it.
 
 Every piece rides the normal TableIO commit protocol, so refreshes are
 resumable and the whole index history is snapshot-logged. Equality
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tableio import TableIO
-from .serving import term_frequencies
+from .serving import corpus_stats_of, term_frequencies
 
 CONFIG_HASH = "index-delta-v1"
 
@@ -151,21 +152,20 @@ def compact_serving_index(
         merged_dl, "doc_lengths", input_snapshot, cfg,
         counter_cols=["dl"], bucket_col="conv_id", n_buckets=n_buckets,
     )
-    stats = io.read_table(spark, "doc_lengths").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("total_tokens"),
-        F.avg("dl").alias("avgdl"),
-    )
     m_stats = io.commit_stage(
-        stats, "corpus_stats", input_snapshot, cfg, counter_cols=["n_docs"]
+        corpus_stats_of(spark, io), "corpus_stats", input_snapshot, cfg,
+        counter_cols=["n_docs"],
     )
-    # reset the delta segment: empty tables under the compacted snapshot
-    empty_tokens = spark.createDataFrame(
-        [], "conv_id string, turn_idx int, term string, tf int"
-    )
-    empty_dl = spark.createDataFrame([], "conv_id string, turn_idx int, dl long")
-    empty_convs = spark.createDataFrame([], "conv_id string")
-    io.commit_stage(empty_tokens, "tokens_delta", input_snapshot, cfg)
-    io.commit_stage(empty_dl, "doc_lengths_delta", input_snapshot, cfg)
-    io.commit_stage(empty_convs, "index_stale_convs", input_snapshot, cfg)
+    # reset the delta segment: empty tables under the compacted snapshot.
+    # A JVM-side empty RDD has no partitions, so each reset write is one
+    # task; createDataFrame([]) parallelizes an empty list over every core
+    empty = spark.sparkContext.emptyRDD()
+    for name, schema in (
+        ("tokens_delta", "conv_id string, turn_idx int, term string, tf int"),
+        ("doc_lengths_delta", "conv_id string, turn_idx int, dl long"),
+        ("index_stale_convs", "conv_id string"),
+    ):
+        io.commit_stage(
+            spark.createDataFrame(empty, schema), name, input_snapshot, cfg
+        )
     return {"tokens": m_tokens, "doc_lengths": m_dl, "corpus_stats": m_stats}

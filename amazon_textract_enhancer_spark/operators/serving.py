@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tableio import TableIO
 from .io_util import materialize, overlap, t
 
 TOKEN_PATTERN = "[^a-z0-9]+"
@@ -54,6 +55,24 @@ def doc_lengths_of(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFram
     the groupBy form."""
     n = F.size(_filtered_terms(text_col))
     return df.select(*id_cols, n.cast("long").alias("dl")).filter(F.col("dl") > 0)
+
+
+def corpus_stats_of(spark: SparkSession, io: TableIO) -> DataFrame:
+    """The one-row BM25 corpus aggregate (n_docs long, total_tokens
+    long, avgdl double) of the committed ``doc_lengths`` table, read
+    from its manifest: the commit counted the rows and summed ``dl``
+    per written partition (``counter_cols=["dl"]``), so no data file is
+    read. ``total / n`` is the same double as Spark's ``avg(dl)``
+    (exact double sums below 2^53, one division); an empty table gives
+    (0, null, null), as the aggregate does. The row is built in the
+    JVM, so committing it starts no Python worker."""
+    n = io.fast_count("doc_lengths")
+    total = io.fast_counter_sum("doc_lengths", "dl") if n else None
+    return spark.range(1, numPartitions=1).select(
+        F.lit(n).cast("long").alias("n_docs"),
+        F.lit(total).cast("long").alias("total_tokens"),
+        F.lit(total / n if n else None).cast("double").alias("avgdl"),
+    )
 
 
 def term_frequencies(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFrame:

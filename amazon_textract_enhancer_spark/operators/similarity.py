@@ -655,10 +655,13 @@ def ivf_compact(spark: SparkSession, warehouse: str, input_snapshot: str) -> dic
     m_main = io.commit_stage(
         merged, "ivf_index", snap, IVF_DELTA_CFG, partition_by="bucket"
     )
+    # a JVM-side empty RDD has no partitions, so each reset write is one
+    # task; createDataFrame([]) parallelizes an empty list over every core
+    empty = spark.sparkContext.emptyRDD()
     empty_idx = spark.createDataFrame(
-        [], "vec_id long, v array<double>, uv array<double>, bucket int"
+        empty, "vec_id long, v array<double>, uv array<double>, bucket int"
     )
-    empty_stale = spark.createDataFrame([], "vec_id long")
+    empty_stale = spark.createDataFrame(empty, "vec_id long")
     io.commit_stage(empty_idx, "ivf_index_delta", snap, IVF_DELTA_CFG)
     io.commit_stage(empty_stale, "ivf_stale_vecs", snap, IVF_DELTA_CFG)
     return {"ivf_index": m_main}

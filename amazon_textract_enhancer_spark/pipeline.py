@@ -5,7 +5,8 @@
     → extracted_spans commit            (F1 bucketed by conv_id, F3)
     → ┬ conversation rollup commit      (F2 salted two-phase agg)
       ├ tokens inverted-index commit    (A9/C5-ii serving table)
-      └ doc_lengths + corpus_stats      (serving statistics)
+      └ doc_lengths → corpus_stats      (serving statistics; the stats
+                                         row from the doc_lengths manifest)
 
 Every stage commits atomically with per-partition lineage counters and
 resumes from the manifest if already committed for the same input
@@ -18,10 +19,13 @@ spans table (the DAG fans out), so they run CONCURRENTLY in one
 session — Spark's scheduler is thread-safe and concurrent
 jobs backfill each other's idle task slots, so the level's wall is
 max(stage walls), not their sum. That matters twice at scale: the
-small aggregations (conv_rollup ~5 s, corpus_stats ~8 s of
-parallelism-independent fixed cost each) hide entirely under the
-tokens build instead of adding serial Amdahl floor, and no stage's
-tail (last task of a skewed bucket write) idles the cluster.
+small stages (conv_rollup's aggregation, the doc_lengths map) hide
+under the tokens build instead of adding serial Amdahl floor, and no
+stage's tail (last task of a skewed bucket write) idles the cluster.
+corpus_stats, the one stage that waits on another, aggregates nothing:
+its row is read off the committed doc_lengths manifest (row count and
+summed ``dl`` lineage counter), so it adds one small commit to that
+chain and no scan.
 
 Cluster launch: ``spark-submit --py-files ates.zip run_pipeline.py``
 (see bench_scaling.py for the exact invocation used in-sandbox). In
@@ -40,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .operators.io_util import overlap
 from .operators.scale import salted_conv_rollup
-from .operators.serving import term_frequencies
+from .operators.serving import corpus_stats_of, doc_lengths_of, term_frequencies
 from .sources.tableio import TableIO, snapshot_id_of
 from .stages import extract_spans
 
@@ -187,59 +191,25 @@ def run_extraction_pipeline(
     # through a data-independent shuffle-partition constant
     # (BENCH/scale10x.json: +152% per-turn at 10×); this form's cost is
     # ∝ turns, and its only exchange is the bucket-by-conv commit.
+    # corpus_stats is read off the committed doc_lengths manifest
+    # (serving.corpus_stats_of: row count and the summed dl lineage
+    # counter), so it scans nothing, and a resumed run builds the same
+    # row the same way.
     def _stage_corpus_stats() -> None:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from .operators.serving import doc_lengths_of
-
-        # The one-row corpus aggregate rides the doc_lengths WRITE via
-        # df.observe() (CollectMetrics): the map tasks that write the
-        # bucketed shards also fold (count, sum, avg) of dl, so the
-        # stats cost zero extra jobs and zero extra scans. The r4 form
-        # re-read the just-committed doc_lengths table — a whole
-        # fresh-session job (~8-10 s parallelism-independent fixed
-        # cost, the measured Amdahl floor of VERDICT r4 item 1) to
-        # reduce one row.
-        obs_row: dict | None = None
         if io.is_committed("doc_lengths", input_snapshot, CONFIG_HASH):
             manifests["doc_lengths"] = io.read_manifest("doc_lengths")
         else:
-            obs = Observation()
-            dl = doc_lengths_of(
-                spans, "extracted_text", ["conv_id", "turn_idx"]
-            ).observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("dl").alias("total_tokens"),
-                F.avg("dl").alias("avgdl"),
-            )
+            dl = doc_lengths_of(spans, "extracted_text", ["conv_id", "turn_idx"])
             manifests["doc_lengths"] = io.commit_stage(
                 dl, "doc_lengths", input_snapshot, CONFIG_HASH,
                 counter_cols=["dl"], bucket_col="conv_id", n_buckets=n_buckets,
             )
-            obs_row = obs.get
         if io.is_committed("corpus_stats", input_snapshot, CONFIG_HASH):
             manifests["corpus_stats"] = io.read_manifest("corpus_stats")
         else:
-            if obs_row is not None:
-                stats = spark.createDataFrame(
-                    [(obs_row["n_docs"], obs_row["total_tokens"], obs_row["avgdl"])],
-                    schema="n_docs long, total_tokens long, avgdl double",
-                )
-            else:
-                # resume path (doc_lengths committed by an earlier,
-                # killed run): no live observation — aggregate the
-                # committed table
-                dl2 = io.read_table(spark, "doc_lengths")
-                stats = dl2.agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    F.sum("dl").alias("total_tokens"),
-                    F.avg("dl").alias("avgdl"),
-                )
             manifests["corpus_stats"] = io.commit_stage(
-                stats, "corpus_stats", input_snapshot, CONFIG_HASH,
-                counter_cols=["n_docs"],
+                corpus_stats_of(spark, io), "corpus_stats", input_snapshot,
+                CONFIG_HASH, counter_cols=["n_docs"],
             )
 
     # derived level: independent consumers of committed spans — run

@@ -14,7 +14,14 @@ Commit protocol (atomic on POSIX rename; crash-safe at every step):
    (rename, not delete — the swap window never has zero copies on disk)
 5. ``os.replace`` the tmp dir to ``<table>/data/``
 6. write ``<table>/_manifest.json`` (tmp file + ``os.replace``) with
-   (stage, input_snapshot, config_hash, rows, per-partition lineage)
+   (stage, input_snapshot, config_hash, rows, per-partition lineage,
+   schema). The manifest is the table's schema authority, as table
+   metadata is for Iceberg readers: ``read_table`` hands the recorded
+   schema to the parquet reader instead of inferring it from file
+   footers, and the commit reads its own files back with the frame's
+   schema — so neither starts a schema-inference job. Manifests
+   written before the schema was recorded have no ``schema`` key and
+   are read with inference.
 7. delete the ``.old-<nonce>`` dir — or, with ``retain_snapshots > 0``,
    rename it to ``snap-<prev_seq>/`` and record it in the append-only
    ``_snapshots.json`` log: the Iceberg snapshot-history analog, read
@@ -41,6 +48,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_manifest.json"
 SNAPLOG = "_snapshots.json"
@@ -197,9 +205,11 @@ class TableIO:
         writer.parquet(tmp)
 
         # F4: per-partition lineage counters, computed from the written
-        # files so the manifest describes exactly what was committed
+        # files so the manifest describes exactly what was committed.
+        # The frame's own schema is passed to the reader: inferring it
+        # from the footers would cost a job of its own
         spark = df.sparkSession
-        written = spark.read.parquet(tmp)
+        written = spark.read.schema(df.schema).parquet(tmp)
         aggs = [F.count(F.lit(1)).alias("rows")]
         for c in counter_cols or []:
             aggs.append(F.sum(c).cast("long").alias(c.replace(".", "_")))
@@ -242,6 +252,7 @@ class TableIO:
             "partition_by": partition_by,
             "range_col": range_col,
             "sort_within": sort_within,
+            "schema": written.schema.jsonValue(),
             # schema evolution survives recommits: entries only matter
             # for files that physically lack the column, so carrying
             # them forward is harmless once writes include it
@@ -279,16 +290,11 @@ class TableIO:
         self, spark: SparkSession, name: str, as_of: int | None = None
     ) -> DataFrame:
         """Read the current snapshot, or — the Iceberg ``VERSION AS OF``
-        analog — a retained superseded one by ``snapshot_seq``."""
-        if as_of is None:
-            return self._apply_evolution(
-                spark.read.parquet(self.data_path(name)), name
-            )
+        analog — a retained superseded one by ``snapshot_seq``, with
+        the schema its manifest (or snapshot-log entry) recorded."""
         m = self.read_manifest(name)
-        if m is not None and m.get("snapshot_seq") == as_of:
-            return self._apply_evolution(
-                spark.read.parquet(self.data_path(name)), name
-            )
+        if as_of is None or (m is not None and m.get("snapshot_seq") == as_of):
+            return self._read(spark, self.data_path(name), m, name)
         snap = self.snap_path(name, as_of)
         if not os.path.isdir(snap):
             known = [e["snapshot_seq"] for e in self.read_snaplog(name)]
@@ -297,7 +303,20 @@ class TableIO:
                 f"(log has {known}; retained dirs only go back "
                 f"{self.retain_snapshots})"
             )
-        return self._apply_evolution(spark.read.parquet(snap), name)
+        entry = next(
+            (e for e in self.read_snaplog(name) if e["snapshot_seq"] == as_of),
+            None,
+        )
+        return self._read(spark, snap, entry, name)
+
+    def _read(
+        self, spark: SparkSession, path: str, manifest: dict | None, name: str
+    ) -> DataFrame:
+        schema = (manifest or {}).get("schema")
+        reader = spark.read
+        if schema is not None:  # else a manifest from before schemas were recorded
+            reader = reader.schema(StructType.fromJson(schema))
+        return self._apply_evolution(reader.parquet(path), name)
 
     def _apply_evolution(self, df: DataFrame, name: str) -> DataFrame:
         """Project the table's evolved schema onto ``df``: any column

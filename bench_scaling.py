@@ -152,7 +152,7 @@ def run_staged_full(master: str, rep: int) -> dict:
     local[8] wall — the whole r4 full-pipeline efficiency shortfall
     (VERDICT r4 item 1). r5 removes that floor structurally: the fixed
     costs overlap the tokens wall instead of summing, and corpus_stats
-    rides the doc_lengths write via df.observe() (zero extra jobs).
+    is read off the committed doc_lengths manifest (no scan).
     Wall = extraction in-job wall + the derived LEVEL's in-job wall
     (max of the concurrent stages, recorded by the pipeline as
     "derived_level"), so per-submit JVM/session startup is excluded

@@ -32,3 +32,20 @@ def transcripts_df(spark):
     rows, _ = generate_transcripts(seed=42, n_convs=25)
     df = spark.createDataFrame(rows_to_pandas(rows), schema=TRANSCRIPT_SCHEMA)
     return df.cache()
+
+
+def jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result
+    and the number of Spark jobs started in the group (threads started
+    through ``io_util.overlap`` inherit the group). The status store is
+    fed by the asynchronous listener bus, so it is drained first: an
+    exact count must not depend on how far the bus has got."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

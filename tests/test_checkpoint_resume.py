@@ -16,6 +16,7 @@ from amazon_textract_enhancer_spark.pipeline import run_extraction_pipeline
 from amazon_textract_enhancer_spark.schemas import TRANSCRIPT_SCHEMA
 from amazon_textract_enhancer_spark.sources.tableio import TableIO
 from amazon_textract_enhancer_spark.stages import extract_spans
+from conftest import jobs_in_group
 
 
 @pytest.fixture()
@@ -45,6 +46,11 @@ def test_pipeline_commit_and_resume_identical(spark, transcripts_df, warehouse):
     assert stats["n_docs"] == n_docs
     assert stats["total_tokens"] == total
     assert abs(stats["avgdl"] - total / n_docs) < 1e-9
+    # exact: the row is read off the doc_lengths manifest, and total / n
+    # is the same double as Spark's avg over the committed table
+    assert stats["avgdl"] == total / n_docs
+    assert stats["avgdl"] == io4.read_table(spark, "doc_lengths").agg(
+        F.avg("dl")).collect()[0][0]
     io = TableIO(warehouse)
     h_before = _hash_table(
         io.read_table(spark, "extracted_spans"), ["conv_id", "turn_idx", "extracted_text"]
@@ -89,6 +95,64 @@ def test_kill_between_stages_resumes_byte_identical(spark, transcripts_df, wareh
         b = _hash_table(io_c.read_table(spark, table), _key_cols(table))
         assert a == b, table
     shutil.rmtree(control, ignore_errors=True)
+
+
+def test_pipeline_job_counts_cold_and_resumed(spark, warehouse):
+    """Exact job-count guard: a cold run starts 22 Spark jobs and a
+    fully resumed re-run 2 (the snapshot hash and nothing else of
+    note). No commit read-back and no read_table infers a schema from
+    parquet footers (that cost one job each: 28 and 3 before), and
+    corpus_stats scans nothing. Built on an uncached input so the count
+    does not depend on which earlier test materialized a cache."""
+    rows, _ = generate_transcripts(seed=42, n_convs=25)
+    df = spark.createDataFrame(rows_to_pandas(rows), schema=TRANSCRIPT_SCHEMA)
+    _, cold = jobs_in_group(
+        spark, "pipeline-cold", lambda: run_extraction_pipeline(spark, df, warehouse))
+    _, resumed = jobs_in_group(
+        spark, "pipeline-resumed", lambda: run_extraction_pipeline(spark, df, warehouse))
+    assert (cold, resumed) == (22, 2)
+
+
+def _stats_row(spark, io):
+    (row,) = io.read_table(spark, "corpus_stats").collect()
+    return row["n_docs"], row["total_tokens"], row["avgdl"]
+
+
+def test_corpus_stats_resume_after_doc_lengths_commit_bitwise(
+    spark, transcripts_df, warehouse
+):
+    """Kill after doc_lengths commits (its manifest stays, corpus_stats
+    has none): the re-run rebuilds corpus_stats from the committed
+    doc_lengths manifest, bit for bit the uninterrupted run's row and
+    Spark's count / sum / avg over the committed doc_lengths."""
+    run_extraction_pipeline(spark, transcripts_df, warehouse)
+    io = TableIO(warehouse)
+    want = _stats_row(spark, io)
+    agg = io.read_table(spark, "doc_lengths").agg(
+        F.count(F.lit(1)), F.sum("dl"), F.avg("dl")).collect()[0]
+    assert want[0] > 0 and tuple(agg) == want
+    assert agg[2].hex() == want[2].hex()
+
+    dl_committed_at = io.read_manifest("doc_lengths")["committed_at_unix"]
+    os.remove(io.manifest_path("corpus_stats"))
+    m = run_extraction_pipeline(spark, transcripts_df, warehouse)
+    assert m["doc_lengths"]["committed_at_unix"] == dl_committed_at
+    got = _stats_row(spark, io)
+    assert got == want
+    assert got[2].hex() == want[2].hex()
+
+
+def test_corpus_stats_of_empty_corpus_is_zero_null_null(spark, warehouse):
+    """A corpus whose turns are all empty or skipped has no doc_lengths
+    rows: corpus_stats is (0, null, null), the empty aggregate's row."""
+    rows, _ = generate_transcripts(seed=42, n_convs=3)
+    for i, r in enumerate(rows):
+        r["text"] = ("", None, "   ")[i % 3]
+    df = spark.createDataFrame(rows_to_pandas(rows), schema=TRANSCRIPT_SCHEMA)
+    m = run_extraction_pipeline(spark, df, warehouse)
+    assert m["extracted_spans"]["rows"] == len(rows)
+    assert m["doc_lengths"]["rows"] == 0
+    assert _stats_row(spark, TableIO(warehouse)) == (0, None, None)
 
 
 def _key_cols(table):

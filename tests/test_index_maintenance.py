@@ -116,6 +116,11 @@ def test_refresh_merge_equals_full_rebuild_and_main_untouched(spark, io):
     stats = io.read_table(spark, "corpus_stats").collect()[0]
     assert stats["n_docs"] == _index_of(spans_v3).select(
         "conv_id", "turn_idx").distinct().count()
+    # the stats row equals count / sum / avg over the committed
+    # doc_lengths exactly (read off its manifest, not re-scanned)
+    want = io.read_table(spark, "doc_lengths").agg(
+        F.count(F.lit(1)), F.sum("dl"), F.avg("dl")).collect()[0]
+    assert tuple(stats) == tuple(want)
 
 
 def test_bm25_over_merged_matches_rebuild(spark, io):

@@ -18,6 +18,7 @@ from amazon_textract_enhancer_spark.operators.io_util import (
     overlap,
     t_spread,
 )
+from conftest import jobs_in_group
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "amazon_textract_enhancer_spark"
 
@@ -27,19 +28,13 @@ def _stored_rdd_ids(spark) -> set[int]:
 
 
 def test_overlap_jobs_keep_caller_job_group(spark):
-    sc = spark.sparkContext
-    sc.setJobGroup("overlap-group-test", "overlap-group-test")
-    try:
-        out = overlap({
-            "a": lambda: spark.range(100).count(),
-            "b": lambda: spark.range(50).count(),
-        })
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    out, n_jobs = jobs_in_group(spark, "overlap-group-test", lambda: overlap({
+        "a": lambda: spark.range(100).count(),
+        "b": lambda: spark.range(50).count(),
+    }))
     assert out == {"a": 100, "b": 50}
     assert list(out) == ["a", "b"]
-    assert len(sc.statusTracker().getJobIdsForGroup("overlap-group-test")) >= 2
+    assert n_jobs >= 2
 
 
 def test_overlap_raises_first_listed_failure(spark):
