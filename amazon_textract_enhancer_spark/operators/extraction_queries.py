@@ -452,11 +452,26 @@ def c4_form_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c4_fetch_form_value(spans, "conv00000000", "  aMoUnT ")
 
 
+def sniff_kind_udf():
+    """Scalar Arrow-vectorized pandas_udf (Series→Series) exposing the
+    D1 payload sniffer as a column function — the lightest UDF shape
+    (the fused stages use mapInArrow; this completes the UDF-surface
+    matrix: scalar / batch-map / grouped-map / grouped-stateful)."""
+    from pyspark.sql.functions import pandas_udf
+
+    from ..core import sniff_kind
+
+    # no type hints: `from __future__ import annotations` stringifies
+    # them, which pandas_udf's hint inspection cannot evaluate
+    def _sniff(texts):
+        return texts.map(lambda t: sniff_kind(t) if isinstance(t, str) else "plain")
+
+    return pandas_udf(_sniff, "string")
+
+
 def x_sniff_kind_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 as a scalar pandas_udf column function: payload-kind census of
     the transcript table without running full extraction."""
-    from ..functions import sniff_kind_udf
-
     tdf = fixture_transcripts(spark, sf_dir)
     return tdf.select(sniff_kind_udf()(F.col("text")).alias("kind")).groupBy(
         "kind"

@@ -534,7 +534,24 @@ def _ivf_probe_search(
     )
 
 
-IVF_DELTA_CFG = "ivf-delta-v1"
+def _ivf_assign(spark: SparkSession, io, new_emb: DataFrame) -> DataFrame:
+    """(vec_id, v, uv, bucket) of new/changed vectors under the FROZEN
+    committed centroids."""
+    cents = io.read_table(spark, "ivf_centroids")
+    return _assign_buckets(_unit_vectors(new_emb), cents).select(
+        "vec_id", "v", "uv", "bucket"
+    )
+
+
+def _ivf_stale_keys(new_emb: DataFrame, stale_vec_ids: DataFrame | None) -> DataFrame:
+    """Every changed vector's id lands in the stale set (its main row is
+    superseded), so an explicit ``stale_vec_ids`` list (deletes) UNIONS
+    with ``new_emb``'s ids rather than replacing them — a mixed call
+    (changed vectors + deletes) must mask both (ADVICE r5)."""
+    keys = new_emb.select("vec_id")
+    if stale_vec_ids is not None:
+        keys = keys.unionByName(stale_vec_ids.select("vec_id"))
+    return keys
 
 
 def ivf_index_refresh(
@@ -546,78 +563,40 @@ def ivf_index_refresh(
     stale_vec_ids: DataFrame | None = None,
 ) -> dict:
     """Main+delta refresh of the committed IVF index — the FAISS
-    add-with-frozen-quantizer pattern, and the ANN twin of
-    ``index_maintenance.refresh_serving_index``: new/changed vectors
+    add-with-frozen-quantizer pattern, on the segment policy of
+    ``index_maintenance`` (group ``IVF_INDEX``): new/changed vectors
     are assigned to the EXISTING committed centroids (the quantizer is
     a model artifact; retraining it would re-bucket the whole corpus)
     and committed as an accumulating ``ivf_index_delta`` segment,
-    hive-partitioned by bucket like main; a stale vec_id list masks
-    superseded/deleted vectors out of main at query time (broadcast
-    anti-join — main is never rewritten).
+    hive-partitioned by bucket like main; the ``ivf_stale_vecs`` list
+    masks superseded/deleted vectors out of main at query time
+    (broadcast anti-join — main is never rewritten).
 
-    Every changed vector's id lands in the stale list (its main row is
-    superseded); deleted vectors are passed via ``stale_vec_ids`` with
-    no row in ``new_emb``. Deltas ACCUMULATE across refreshes; a
-    re-changed vector's prior delta row is dropped (the new stale list
-    supersedes it). Cost per refresh ∝ delta size: one
-    broadcast-centroid argmax over the new vectors plus two small
-    commits — at 10^12 indexed vectors a daily 0.1% diff costs 10^9
-    assignment rows, not an index rebuild. Centroid drift is handled
-    at compaction cadence (``ivf_compact`` folds under the same
-    centroids; a full retrain is a new ``ivf_build_index``)."""
+    Deleted vectors are passed via ``stale_vec_ids`` with no row in
+    ``new_emb``. Cost per refresh ∝ delta size: one broadcast-centroid
+    argmax over the new vectors plus two small commits — at 10^12
+    indexed vectors a daily 0.1% diff costs 10^9 assignment rows, not
+    an index rebuild. Centroid drift is handled at compaction cadence
+    (``ivf_compact`` folds under the same centroids; a full retrain is
+    a new ``ivf_build_index``)."""
     from ..sources.tableio import TableIO
+    from .index_maintenance import IVF_INDEX, refresh_segments
 
     io = TableIO(warehouse)
-    cents = io.read_table(spark, "ivf_centroids")
-    assigned = _assign_buckets(_unit_vectors(new_emb), cents).select(
-        "vec_id", "v", "uv", "bucket"
+    return refresh_segments(
+        spark, io, IVF_INDEX,
+        {"ivf_index": _ivf_assign(spark, io, new_emb)},
+        _ivf_stale_keys(new_emb, stale_vec_ids), input_snapshot,
     )
-    # every changed vector's id must land in the stale set (its main
-    # row is superseded) — so an explicit stale_vec_ids list (deletes)
-    # UNIONS with new_emb's ids rather than replacing them; a mixed
-    # call (changed vectors + deletes) previously left the changed
-    # vectors' main rows unmasked and their prior delta rows undropped
-    # (ADVICE r5: duplicate vec_ids in the merged view)
-    new_stale = new_emb.select("vec_id")
-    if stale_vec_ids is not None:
-        new_stale = new_stale.unionByName(stale_vec_ids.select("vec_id"))
-    new_stale = new_stale.distinct()
-    prev = io.read_manifest("ivf_index_delta")
-    if prev is not None and prev["rows"] > 0:
-        prev_delta = io.read_table(spark, "ivf_index_delta").join(
-            F.broadcast(new_stale), "vec_id", "left_anti"
-        )
-        assigned = prev_delta.unionByName(assigned)
-    if io.read_manifest("ivf_stale_vecs") is not None:
-        new_stale = (
-            io.read_table(spark, "ivf_stale_vecs")
-            .unionByName(new_stale)
-            .distinct()
-        )
-    m_delta = io.commit_stage(
-        assigned, "ivf_index_delta", input_snapshot, IVF_DELTA_CFG,
-        partition_by="bucket",
-    )
-    m_stale = io.commit_stage(
-        new_stale, "ivf_stale_vecs", input_snapshot, IVF_DELTA_CFG
-    )
-    return {"ivf_index_delta": m_delta, "ivf_stale_vecs": m_stale}
 
 
 def read_ivf_index_merged(spark: SparkSession, warehouse: str) -> DataFrame:
     """Query-time view: main minus stale vec_ids (broadcast anti-join,
     no shuffle of main), plus the delta segment."""
     from ..sources.tableio import TableIO
+    from .index_maintenance import IVF_INDEX, read_merged
 
-    io = TableIO(warehouse)
-    if io.read_manifest("ivf_index_delta") is None:
-        return io.read_table(spark, "ivf_index")
-    delta = io.read_table(spark, "ivf_index_delta")
-    if io.read_manifest("ivf_index") is None:
-        return delta
-    main = io.read_table(spark, "ivf_index")
-    stale = io.read_table(spark, "ivf_stale_vecs")
-    return main.join(F.broadcast(stale), "vec_id", "left_anti").unionByName(delta)
+    return read_merged(spark, TableIO(warehouse), IVF_INDEX, "ivf_index")
 
 
 def ivf_search_merged(
@@ -641,30 +620,17 @@ def ivf_search_merged(
 
 
 def ivf_compact(spark: SparkSession, warehouse: str, input_snapshot: str) -> dict:
-    """Fold the delta segment into main under the SAME centroids (one
-    rewrite, amortized over the refreshes since the last compaction)
-    and reset delta/stale — the ANN analog of
-    ``index_maintenance.compact_serving_index``. Commits under
-    ``<input_snapshot>:compacted`` so the reset is not swallowed by the
-    refresh's own manifests."""
+    """Fold the delta segments into main under the SAME centroids and
+    codebook (one rewrite each, amortized over the refreshes since the
+    last compaction) and reset delta/stale — ``compact_segments`` over
+    the ``IVF_INDEX`` group, the ANN analog of
+    ``index_maintenance.compact_serving_index``. The float index and,
+    when an IVF-PQ refresh committed one, the ``ivf_pq_codes_delta``
+    are both folded before the shared stale list is reset."""
     from ..sources.tableio import TableIO
+    from .index_maintenance import IVF_INDEX, compact_segments
 
-    io = TableIO(warehouse)
-    snap = f"{input_snapshot}:compacted"
-    merged = read_ivf_index_merged(spark, warehouse)
-    m_main = io.commit_stage(
-        merged, "ivf_index", snap, IVF_DELTA_CFG, partition_by="bucket"
-    )
-    # a JVM-side empty RDD has no partitions, so each reset write is one
-    # task; createDataFrame([]) parallelizes an empty list over every core
-    empty = spark.sparkContext.emptyRDD()
-    empty_idx = spark.createDataFrame(
-        empty, "vec_id long, v array<double>, uv array<double>, bucket int"
-    )
-    empty_stale = spark.createDataFrame(empty, "vec_id long")
-    io.commit_stage(empty_idx, "ivf_index_delta", snap, IVF_DELTA_CFG)
-    io.commit_stage(empty_stale, "ivf_stale_vecs", snap, IVF_DELTA_CFG)
-    return {"ivf_index": m_main}
+    return compact_segments(spark, TableIO(warehouse), IVF_INDEX, input_snapshot)
 
 
 def ivf_warehouse_for(sf_dir: str) -> str:
@@ -1770,9 +1736,6 @@ def ann_ivf_pq_topk(
     return ivf_pq_search(spark, wh, nprobe=nprobe, k=k, shortlist=shortlist)
 
 
-IVF_PQ_DELTA_CFG = "ivfpq-delta-v1"
-
-
 def ivf_pq_refresh(
     spark: SparkSession,
     warehouse: str,
@@ -1781,23 +1744,24 @@ def ivf_pq_refresh(
     *,
     stale_vec_ids: DataFrame | None = None,
 ) -> dict:
-    """Main+delta refresh of the committed IVF-PQ index: the float
-    side delegates to ``ivf_index_refresh`` (frozen centroids, stale
-    union discipline), then the SAME new/changed vectors are encoded
-    with the FROZEN committed codebook (a quantizer is a model
-    artifact — re-training it would re-code the whole corpus) and
-    appended to an accumulating ``ivf_pq_codes_delta`` segment,
-    bucket-partitioned like main. The stale mask is shared with the
-    float index (``ivf_stale_vecs``) — one list masks both tables.
-    Cost per refresh ∝ delta size; main codes are never rewritten
-    (compaction = ``ivf_compact`` + re-encode fold, same cadence)."""
+    """Main+delta refresh of the committed IVF-PQ index: the float rows
+    are assigned as in ``ivf_index_refresh`` (frozen centroids), and
+    the SAME new/changed vectors are encoded with the FROZEN committed
+    codebook (a quantizer is a model artifact — re-training it would
+    re-code the whole corpus). Both land in one ``refresh_segments``
+    call over the ``IVF_INDEX`` group — ``ivf_index_delta`` and
+    ``ivf_pq_codes_delta``, bucket-partitioned like their mains — so
+    one stale list (``ivf_stale_vecs``) masks both tables. Cost per
+    refresh ∝ delta size; main codes are never rewritten. Compaction is
+    ``ivf_compact``: it folds the codes delta into ``ivf_pq_codes``
+    through the same merged view (the delta rows are already encoded,
+    so the fold re-encodes nothing) and resets both deltas and the
+    stale list only after both folds."""
     from ..sources.tableio import TableIO
+    from .index_maintenance import IVF_INDEX, refresh_segments
 
     io = TableIO(warehouse)
-    m = ivf_index_refresh(spark, warehouse, new_emb, input_snapshot,
-                          stale_vec_ids=stale_vec_ids)
-    cents = io.read_table(spark, "ivf_centroids")
-    assigned = _assign_buckets(_unit_vectors(new_emb), cents)
+    assigned = _ivf_assign(spark, io, new_emb)
     cb = _pq_codebook_row(io.read_table(spark, "pq_codebook"))
     # encode with the COMMITTED subspace count — a caller-supplied
     # m_sub could append wrong-length code rows into the merged view
@@ -1807,21 +1771,11 @@ def ivf_pq_refresh(
         .crossJoin(F.broadcast(cb))
         .select("vec_id", "bucket", _pq_codes_expr("v", m_sub).alias("codes"))
     )
-    new_stale = new_emb.select("vec_id")
-    if stale_vec_ids is not None:
-        new_stale = new_stale.unionByName(stale_vec_ids.select("vec_id"))
-    new_stale = new_stale.distinct()
-    prev = io.read_manifest("ivf_pq_codes_delta")
-    if prev is not None and prev["rows"] > 0:
-        prev_delta = io.read_table(spark, "ivf_pq_codes_delta").join(
-            F.broadcast(new_stale), "vec_id", "left_anti"
-        )
-        new_codes = prev_delta.unionByName(new_codes)
-    m_delta = io.commit_stage(
-        new_codes, "ivf_pq_codes_delta", input_snapshot, IVF_PQ_DELTA_CFG,
-        partition_by="bucket",
+    return refresh_segments(
+        spark, io, IVF_INDEX,
+        {"ivf_index": assigned, "ivf_pq_codes": new_codes},
+        _ivf_stale_keys(new_emb, stale_vec_ids), input_snapshot,
     )
-    return {**m, "ivf_pq_codes_delta": m_delta}
 
 
 def read_ivf_pq_codes_merged(spark: SparkSession, warehouse: str) -> DataFrame:
@@ -1829,14 +1783,9 @@ def read_ivf_pq_codes_merged(spark: SparkSession, warehouse: str) -> DataFrame:
     (broadcast anti-join — main is never rewritten), plus the delta
     segment."""
     from ..sources.tableio import TableIO
+    from .index_maintenance import IVF_INDEX, read_merged
 
-    io = TableIO(warehouse)
-    if io.read_manifest("ivf_pq_codes_delta") is None:
-        return io.read_table(spark, "ivf_pq_codes")
-    delta = io.read_table(spark, "ivf_pq_codes_delta")
-    main = io.read_table(spark, "ivf_pq_codes")
-    stale = io.read_table(spark, "ivf_stale_vecs")
-    return main.join(F.broadcast(stale), "vec_id", "left_anti").unionByName(delta)
+    return read_merged(spark, TableIO(warehouse), IVF_INDEX, "ivf_pq_codes")
 
 
 def ivf_pq_search_merged(

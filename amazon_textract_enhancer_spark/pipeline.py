@@ -60,7 +60,6 @@ def run_extraction_pipeline(
     input_snapshot: str | None = None,
     stages: list[str] | None = None,
     retain_snapshots: int = 0,
-    sort_tokens: bool = False,
 ) -> dict:
     """Run (or resume) the pipeline; returns manifests per stage plus a
     ``_stage_seconds`` timing map (per-stage wall, for the
@@ -68,7 +67,9 @@ def run_extraction_pipeline(
 
     ``stages``: run only the named subset (stage-per-job scheduling:
     each later stage resumes from the previous stage's committed
-    table).
+    table). Resume needs no check here: every stage frame is lazy, and
+    ``commit_stage`` returns the committed manifest without running it
+    when (input_snapshot, config) already match.
 
     ``n_buckets`` sizing: with the exchange pushed below the
     extraction (stage 1), the extraction stage runs on exactly
@@ -97,34 +98,28 @@ def run_extraction_pipeline(
     # stage 1: extraction (shuffle-free UDF stage) + bucketed commit (F1)
     if "extracted_spans" in run_set:
         _t = _time.monotonic()
-        if io.is_committed("extracted_spans", input_snapshot, CONFIG_HASH):
-            manifests["extracted_spans"] = io.read_manifest("extracted_spans")
-        else:
-            # exchange BELOW the extraction (r5): bucket the raw INPUT
-            # by conv_id, then extract — the UDF is a per-turn narrow
-            # map, so it commutes with the repartition and preserves
-            # partition identity; the commit then writes map-side
-            # (pre_bucketed). The old order shuffled the extraction's
-            # OUTPUT: the same rows but ~2× wider, with deeply nested
-            # table/kv structs whose UnsafeRow serialization dominated
-            # the commit cost (measured: +4-26 s at local[8] on 1M
-            # turns, the full-pipeline scaling gate's worst component).
-            # Raw transcript rows are six flat columns — the cheapest
-            # form of this data that will ever exist to shuffle.
-            spans = extract_spans(
-                transcripts.repartition(n_buckets, "conv_id")
-            )
-            manifests["extracted_spans"] = io.commit_stage(
-                spans,
-                "extracted_spans",
-                input_snapshot,
-                CONFIG_HASH,
-                counter_cols=["counters.blocks_parsed", "counters.tables_reconstructed",
-                              "counters.kv_pairs"],
-                bucket_col="conv_id",
-                n_buckets=n_buckets,
-                pre_bucketed=True,
-            )
+        # exchange BELOW the extraction (r5): bucket the raw INPUT by
+        # conv_id, then extract — the UDF is a per-turn narrow map, so
+        # it commutes with the repartition and preserves partition
+        # identity; the commit then writes map-side (pre_bucketed). The
+        # old order shuffled the extraction's OUTPUT: the same rows but
+        # ~2× wider, with deeply nested table/kv structs whose UnsafeRow
+        # serialization dominated the commit cost (measured: +4-26 s at
+        # local[8] on 1M turns, the full-pipeline scaling gate's worst
+        # component). Raw transcript rows are six flat columns — the
+        # cheapest form of this data that will ever exist to shuffle.
+        spans = extract_spans(transcripts.repartition(n_buckets, "conv_id"))
+        manifests["extracted_spans"] = io.commit_stage(
+            spans,
+            "extracted_spans",
+            input_snapshot,
+            CONFIG_HASH,
+            counter_cols=["counters.blocks_parsed", "counters.tables_reconstructed",
+                          "counters.kv_pairs"],
+            bucket_col="conv_id",
+            n_buckets=n_buckets,
+            pre_bucketed=True,
+        )
         stage_seconds["extracted_spans"] = round(_time.monotonic() - _t, 2)
 
     if run_set - {"extracted_spans"}:
@@ -146,36 +141,20 @@ def run_extraction_pipeline(
 
     # stage 2: conversation rollup (explicit salting F2)
     def _stage_conv_rollup() -> None:
-        if io.is_committed("conv_rollup", input_snapshot, CONFIG_HASH):
-            manifests["conv_rollup"] = io.read_manifest("conv_rollup")
-        else:
-            rollup = salted_conv_rollup(spans)
-            manifests["conv_rollup"] = io.commit_stage(
-                rollup, "conv_rollup", input_snapshot, CONFIG_HASH,
-                counter_cols=["n_turns", "n_tables", "n_forms", "n_skipped"],
-            )
+        manifests["conv_rollup"] = io.commit_stage(
+            salted_conv_rollup(spans), "conv_rollup", input_snapshot, CONFIG_HASH,
+            counter_cols=["n_turns", "n_tables", "n_forms", "n_skipped"],
+        )
 
     # stage 3: tokens inverted index (serving layer A9/C5)
     def _stage_tokens() -> None:
-        if io.is_committed("tokens", input_snapshot, CONFIG_HASH):
-            manifests["tokens"] = io.read_manifest("tokens")
-        else:
-            # tf is within-turn local: run-length encoding per row, zero
-            # shuffle — the only exchange is the bucket-by-term write
-            toks = term_frequencies(spans, "extracted_text", ["conv_id", "turn_idx"])
-            # sort_tokens (Iceberg write.sort-order analog, default
-            # off): sorting each bucket by term lands one term's
-            # postings contiguously, which (measured, 1M turns)
-            # RLE/dict-compresses the table 131→77 MB and turns parquet
-            # row-group min/max stats into real term zone maps for the
-            # indexed search path — at the cost of +60% tokens-stage
-            # wall (the per-bucket sort). Read-heavy serving deployments
-            # flip it on; the default optimizes pipeline throughput.
-            manifests["tokens"] = io.commit_stage(
-                toks, "tokens", input_snapshot, CONFIG_HASH,
-                counter_cols=["tf"], bucket_col="term", n_buckets=n_buckets,
-                sort_within=["term", "conv_id", "turn_idx"] if sort_tokens else None,
-            )
+        # tf is within-turn local: run-length encoding per row, zero
+        # shuffle — the only exchange is the bucket-by-term write
+        toks = term_frequencies(spans, "extracted_text", ["conv_id", "turn_idx"])
+        manifests["tokens"] = io.commit_stage(
+            toks, "tokens", input_snapshot, CONFIG_HASH,
+            counter_cols=["tf"], bucket_col="term", n_buckets=n_buckets,
+        )
 
     # stage 4: serving statistics — per-turn token lengths plus the
     # one-row corpus aggregate (n_docs, avgdl, total_tokens). These are
@@ -196,21 +175,15 @@ def run_extraction_pipeline(
     # counter), so it scans nothing, and a resumed run builds the same
     # row the same way.
     def _stage_corpus_stats() -> None:
-        if io.is_committed("doc_lengths", input_snapshot, CONFIG_HASH):
-            manifests["doc_lengths"] = io.read_manifest("doc_lengths")
-        else:
-            dl = doc_lengths_of(spans, "extracted_text", ["conv_id", "turn_idx"])
-            manifests["doc_lengths"] = io.commit_stage(
-                dl, "doc_lengths", input_snapshot, CONFIG_HASH,
-                counter_cols=["dl"], bucket_col="conv_id", n_buckets=n_buckets,
-            )
-        if io.is_committed("corpus_stats", input_snapshot, CONFIG_HASH):
-            manifests["corpus_stats"] = io.read_manifest("corpus_stats")
-        else:
-            manifests["corpus_stats"] = io.commit_stage(
-                corpus_stats_of(spark, io), "corpus_stats", input_snapshot,
-                CONFIG_HASH, counter_cols=["n_docs"],
-            )
+        dl = doc_lengths_of(spans, "extracted_text", ["conv_id", "turn_idx"])
+        manifests["doc_lengths"] = io.commit_stage(
+            dl, "doc_lengths", input_snapshot, CONFIG_HASH,
+            counter_cols=["dl"], bucket_col="conv_id", n_buckets=n_buckets,
+        )
+        manifests["corpus_stats"] = io.commit_stage(
+            corpus_stats_of(spark, io), "corpus_stats", input_snapshot,
+            CONFIG_HASH, counter_cols=["n_docs"],
+        )
 
     # derived level: independent consumers of committed spans — run
     # concurrently (see module doc); wall = max(stage walls), and the

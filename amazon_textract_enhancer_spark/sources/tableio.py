@@ -117,11 +117,11 @@ class TableIO:
         with open(p) as f:
             return json.load(f)
 
-    def _write_snaplog(self, name: str, log: list[dict]) -> None:
-        tmp = self.snaplog_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f, indent=2, sort_keys=True)
-        os.replace(tmp, self.snaplog_path(name))
+    def write_manifest(self, name: str, manifest: dict) -> None:
+        """Atomically replace the table's manifest (tmp file +
+        ``os.replace``): readers see the old or the new one, never a
+        partial write."""
+        _replace_json(self.manifest_path(name), manifest)
 
     def is_committed(self, name: str, input_snapshot: str, config_hash: str) -> bool:
         m = self.read_manifest(name)
@@ -260,10 +260,7 @@ class TableIO:
         }
         if extra:
             manifest.update(extra)
-        tmp_manifest = self.manifest_path(name) + ".tmp"
-        with open(tmp_manifest, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
-        os.replace(tmp_manifest, self.manifest_path(name))
+        self.write_manifest(name, manifest)
         # snapshot retention (time travel): the replaced data/ becomes
         # snap-<prev_seq> instead of being deleted — prev_seq read from
         # the manifest that was current before this commit (NOT the
@@ -282,7 +279,7 @@ class TableIO:
         for e in log[:-1]:
             if not os.path.isdir(self.snap_path(name, e["snapshot_seq"])):
                 e["expired"] = True
-        self._write_snaplog(name, log)
+        _replace_json(self.snaplog_path(name), log)
         self.expire_snapshots(name, keep=self.retain_snapshots)
         return manifest
 
@@ -376,10 +373,7 @@ class TableIO:
             }
         ]
         m["added_columns"] = evo
-        tmp_manifest = self.manifest_path(name) + ".tmp"
-        with open(tmp_manifest, "w") as f:
-            json.dump(m, f, indent=2, sort_keys=True)
-        os.replace(tmp_manifest, self.manifest_path(name))
+        self.write_manifest(name, m)
         return m
 
     def fast_count(self, name: str) -> int:
@@ -480,10 +474,7 @@ class TableIO:
                 shutil.rmtree(data)
         os.replace(snap, data)
         entry = {k: v for k, v in entry.items() if k != "expired"}
-        tmp_manifest = self.manifest_path(name) + ".tmp"
-        with open(tmp_manifest, "w") as f:
-            json.dump(entry, f, indent=2, sort_keys=True)
-        os.replace(tmp_manifest, self.manifest_path(name))
+        self.write_manifest(name, entry)
         return entry
 
     def expire_snapshots(self, name: str, keep: int) -> list[int]:
@@ -506,8 +497,15 @@ class TableIO:
             for e in log:
                 if e["snapshot_seq"] in drop:
                     e["expired"] = True
-            self._write_snaplog(name, log)
+            _replace_json(self.snaplog_path(name), log)
         return drop
+
+
+def _replace_json(path: str, obj) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2, sort_keys=True)
+    os.replace(tmp, path)
 
 
 def snapshot_id_of(df: DataFrame, key_cols: list[str]) -> str:

@@ -468,12 +468,7 @@ def compact_stream_landing(
     manifest["compaction"].update(
         {"output_files": out_files, "output_bytes": out_bytes}
     )
-    tmp = io.manifest_path(name) + ".tmp"
-    import json as _json
-
-    with open(tmp, "w") as f:
-        _json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, io.manifest_path(name))
+    io.write_manifest(name, manifest)
     return manifest
 
 

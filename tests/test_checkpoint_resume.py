@@ -429,33 +429,3 @@ def test_range_sorted_export_shards(spark, warehouse):
                          sort_within=["doc_id"], n_buckets=4)
     assert m2["committed_at_unix"] == m["committed_at_unix"]
 
-
-def test_sort_tokens_knob_same_table_sorted_layout(spark, transcripts_df, tmp_path):
-    """sort_tokens=True (Iceberg write.sort-order analog): the tokens
-    table content is identical to the default write, the manifest
-    records the sort order, and each written bucket file is internally
-    term-ordered (the layout that makes parquet row-group term stats
-    real zone maps for the indexed search path)."""
-    import glob as _glob
-
-    wh_a = str(tmp_path / "wh_a")
-    wh_b = str(tmp_path / "wh_b")
-    run_extraction_pipeline(spark, transcripts_df, wh_a)
-    run_extraction_pipeline(spark, transcripts_df, wh_b, sort_tokens=True)
-
-    cols = ["term", "conv_id", "turn_idx", "tf"]
-    a = _hash_table(TableIO(wh_a).read_table(spark, "tokens"), cols)
-    b = _hash_table(TableIO(wh_b).read_table(spark, "tokens"), cols)
-    assert a == b
-
-    m = TableIO(wh_b).read_manifest("tokens")
-    assert m["sort_within"] == ["term", "conv_id", "turn_idx"]
-
-    # per-file term order: every written parquet file is sorted
-    files = _glob.glob(f"{wh_b}/tokens/**/*.parquet", recursive=True)
-    assert files
-    import pyarrow.parquet as pq
-
-    for f in files[:4]:
-        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
-        assert terms == sorted(terms)

@@ -239,6 +239,18 @@ def test_ivf_pq_refresh_merge_supersede_delete_and_equivalence(spark):
     # the deleted vector must be gone
     assert {9001, 9002} <= got_ids and 99 not in got_ids
 
+    # compaction folds the codes delta as well as the float one: the
+    # codes, merged or main, still equal the oracle (one row per live
+    # vec_id, the deleted vector stays gone) and the delta is reset
+    S.ivf_compact(spark, wh, "snap-r1")
+    for codes in (S.read_ivf_pq_codes_merged(spark, wh),
+                  io.read_table(spark, "ivf_pq_codes")):
+        rows = codes.collect()
+        assert len(rows) == len({r.vec_id for r in rows})
+        assert 99 not in {r.vec_id for r in rows}
+        assert {(r.vec_id, r.bucket, tuple(r.codes)) for r in rows} == want
+    assert io.read_manifest("ivf_pq_codes_delta")["rows"] == 0
+
 
 def test_pq_param_guards(spark):
     """Bad parameters fail LOUDLY at the call site, not downstream
