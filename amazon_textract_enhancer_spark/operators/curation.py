@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _shingles
 from .io_util import materialize, overlap, t, t_spread
-from .serving import TOKEN_PATTERN
+from .serving import kgrams, split_terms, terms
 
 # Gopher-style thresholds (arXiv 2112.11446 §A1.1 uses 0.18 for the
 # top-2-gram character fraction; the duplicate-5-gram family uses
@@ -49,12 +49,6 @@ DECONTAM_K = 5
 DECONTAM_OVERLAP_MIN = 0.3
 
 
-def _tokens(text_col: str = "text"):
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_PATTERN), lambda x: x != ""
-    )
-
-
 def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repetition-based quality filtering (★) — the Gopher rules
     reshaped for this corpus's single-line texts: per doc,
@@ -74,9 +68,8 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic argmax (count desc, bigram desc). At 10^12 docs both
     keys are fine-grained — no skew, no driver involvement."""
     docs = t(spark, sf_dir, "documents")
-    L = _tokens()
     base = docs.select(
-        "doc_id", F.length("text").alias("nch"), L.alias("L")
+        "doc_id", F.length("text").alias("nch"), terms("text").alias("L")
     ).filter(F.size("L") >= 3)
 
     nt = F.size("L")
@@ -101,20 +94,8 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dup_trigram_frac"),
     )
 
-    bg = base.select(
-        "doc_id",
-        "nch",
-        F.explode(F.sequence(F.lit(1), nt - 1)).alias("i"),
-        "L",
-    ).select(
-        "doc_id",
-        "nch",
-        F.concat_ws(
-            " ",
-            F.element_at(F.col("L"), F.col("i")),
-            F.element_at(F.col("L"), F.col("i") + 1),
-        ).alias("bg"),
-    )
+    rows, parts = kgrams(base, 2, ["doc_id", "nch"])
+    bg = rows.select("doc_id", "nch", F.concat_ws(" ", *parts).alias("bg"))
     bgc = bg.groupBy("doc_id", "nch", "bg").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("doc_id").orderBy(
         F.col("n").desc(), F.col("bg").desc()
@@ -346,8 +327,7 @@ def chunk_documents(
             f"window_tokens={window_tokens}"
         )
     docs = t(spark, sf_dir, "documents")
-    L = _tokens()
-    base = docs.select("doc_id", L.alias("L")).filter(F.size("L") >= 1)
+    base = docs.select("doc_id", terms("text").alias("L")).filter(F.size("L") >= 1)
     n = F.size("L")
     n_chunks = (
         F.greatest(
@@ -404,15 +384,9 @@ def dedup_repeated_spans(
     in 10^9 docs costs one combiner row per task, not a 10^18 pair
     explosion. md5 keeps the DuckDB twin exact (cross-engine hex)."""
     docs = t(spark, sf_dir, "documents")
-    L = _tokens()
-    base = docs.select("doc_id", L.alias("L")).filter(F.size("L") >= k)
-    spans = base.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.lit(1), F.size("L") - (k - 1))
-        ).alias("i"),
-        "L",
-    ).select(
+    base = docs.select("doc_id", terms("text").alias("L")).filter(F.size("L") >= k)
+    rows, _parts = kgrams(base, k, ["doc_id"])
+    spans = rows.select(
         "doc_id",
         F.md5(F.array_join(F.slice("L", F.col("i"), k), " ")).alias("span_fp"),
     )
@@ -549,7 +523,7 @@ def mixture_weights(
     DuckDB twin is bit-stable (IEEE-correctly-rounded in both
     engines); other alphas go through pow."""
     docs = t(spark, sf_dir, "documents")
-    ntok = F.size(_tokens())
+    ntok = F.size(terms("text"))
     domains = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(ntok).cast("long").alias("domain_tokens"),
@@ -587,7 +561,7 @@ def _hashed_bigram_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex chars (engine-portable, 256 buckets). Docs with <2 tokens
     emit nothing."""
     docs = t(spark, sf_dir, "documents")
-    base = docs.select("doc_id", "lang", _tokens().alias("L")).filter(
+    base = docs.select("doc_id", "lang", terms("text").alias("L")).filter(
         F.size("L") >= 2
     )
     arr = F.col("L")
@@ -949,7 +923,7 @@ def decontaminate_bloom(
     # into the interpreted lambda, measured 2.3s → 20s here) with the
     # per-(doc, shingle) dedup applied to the tiny verified-hit set
     # via countDistinct instead of the whole corpus stream.
-    L = F.split(F.lower(F.col("text")), TOKEN_PATTERN)
+    L = split_terms("text")
     totals = (
         docs.filter(~is_eval)
         .select("doc_id", L.alias("L"))

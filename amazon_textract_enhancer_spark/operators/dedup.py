@@ -36,7 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io_util import materialize, overlap, t
-from .serving import TOKEN_PATTERN
+# re-exported for the brute-force reference in tests/test_dedup_skew.py
+from .serving import TOKEN_PATTERN  # noqa: F401
+from .serving import kgrams, split_terms, terms, tokenize
 
 N_MINHASH = 16  # signature length
 N_BANDS = 4  # 4 bands x 4 rows: P(candidate) = 1-(1-j^4)^4
@@ -69,18 +71,9 @@ def _shingles_raw(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFram
     entire (doc_id, shingle) stream once BEFORE the consumer's
     aggregation exchanged it again (VERDICT r4: ~2× warm regression on
     the dedup headliners)."""
-    L = F.split(F.lower(F.col(text_col)), TOKEN_PATTERN)
-    df = df.select("doc_id", L.alias("L"))
-    parts = [F.element_at(F.col("L"), F.col("i") + j) for j in range(k)]
-    return (
-        df.filter(F.size("L") >= k)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(1), F.size("L") - (k - 1))).alias("i"),
-            "L",
-        )
-        .select("doc_id", F.concat_ws(" ", *parts).alias("shingle"))
-    )
+    base = df.select("doc_id", split_terms(text_col).alias("L"))
+    rows, parts = kgrams(base.filter(F.size("L") >= k), k, ["doc_id"])
+    return rows.select("doc_id", F.concat_ws(" ", *parts).alias("shingle"))
 
 
 def _shingle_hashes_raw(
@@ -96,18 +89,9 @@ def _shingle_hashes_raw(
     (birthday bound ~n²/2⁶⁵ ≈ 2e-9 at the sf0.1 shingle count, and
     still <1e-3 at 10¹² shingles — and a collision only ever MERGES two
     posting lists, overcounting one intersection by 1)."""
-    L = F.split(F.lower(F.col(text_col)), TOKEN_PATTERN)
-    df = df.select("doc_id", L.alias("L"))
-    parts = [F.element_at(F.col("L"), F.col("i") + j) for j in range(k)]
-    return (
-        df.filter(F.size("L") >= k)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(1), F.size("L") - (k - 1))).alias("i"),
-            "L",
-        )
-        .select("doc_id", F.xxhash64(*parts).alias("sh"))
-    )
+    base = df.select("doc_id", split_terms(text_col).alias("L"))
+    rows, parts = kgrams(base.filter(F.size("L") >= k), k, ["doc_id"])
+    return rows.select("doc_id", F.xxhash64(*parts).alias("sh"))
 
 
 def _shingle_hash_array(L_col: str = "L", k: int = 3):
@@ -224,19 +208,14 @@ def dedup_ngram_jaccard(
     # split() INSIDE the interpreted lambda (re-evaluated per element,
     # O(tokens²) per row). Exploding the cheap sequence() keeps the
     # Generate codegen'd; only the scalar ``sz`` uses the in-row array.
-    L = F.split(F.lower(F.col("text")), TOKEN_PATTERN)
-    parts = [F.element_at(F.col("L"), F.col("i") + j) for j in range(3)]
-    posting = (
-        docs.select("doc_id", L.alias("L"))
+    sized = (
+        docs.select("doc_id", split_terms("text").alias("L"))
         .filter(F.size("L") >= 3)
         .select("doc_id", F.size(_shingle_hash_array("L")).alias("sz"), "L")
-        .select(
-            "doc_id",
-            "sz",
-            F.explode(F.sequence(F.lit(1), F.size("L") - 2)).alias("i"),
-            "L",
-        )
-        .select("doc_id", "sz", F.xxhash64(*parts).alias("sh"))
+    )
+    rows, parts = kgrams(sized, 3, ["doc_id", "sz"])
+    posting = (
+        rows.select("doc_id", "sz", F.xxhash64(*parts).alias("sh"))
         .groupBy("sh")
         .agg(F.collect_set(F.struct("doc_id", "sz")).alias("ids"))
     )
@@ -476,9 +455,9 @@ def simhash_fingerprints(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame
     higher-order aggregate (shiftleft's shift amount can be a column
     in SQL, unlike the Python API). shiftleft(1L, 63) wraps to
     Long.MIN_VALUE on the JVM — exactly the sign-bit mask we want."""
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.lower(F.col("text")), TOKEN_PATTERN)).alias("tok")
-    ).filter(F.col("tok") != "").select("doc_id", F.xxhash64("tok").alias("h"))
+    toks = tokenize(docs, "text", ["doc_id"]).select(
+        "doc_id", F.xxhash64("term").alias("h")
+    )
     sums_sql = ", ".join(
         f"sum(shiftrightunsigned(h, {b}) & 1L)" for b in range(bits)
     )
@@ -547,24 +526,13 @@ def simhash_banded(fp: DataFrame, n_blocks: int = SIMHASH_BLOCKS,
     )
 
 
-def simhash_hot_buckets(banded: DataFrame,
-                        bucket_cap: int = BAND_BUCKET_CAP) -> DataFrame:
-    """(band, bucket, n) groups larger than the cap — audit view of what
-    the band join drops (truncation is never silent)."""
-    return (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap)
-    )
-
-
 def simhash_candidates(fp: DataFrame, *, bucket_cap: int = BAND_BUCKET_CAP,
                        max_hamming: int | None = None) -> DataFrame:
     """(doc_a, doc_b, hamming) — banded candidate pairs with their exact
     hamming distance (bit_count over xor). Hot (band, bucket) groups are
     dropped from BOTH sides before the self-join (a hot bucket emits
     |bucket|² candidates; identical-doc floods are exact-dedup's job);
-    ``simhash_hot_buckets`` audits the drop.
+    ``lsh_hot_buckets`` audits the drop.
 
     The banded fingerprint table is materialized once: it feeds both
     the hot-bucket audit and the self-join, and recomputing it would
@@ -575,7 +543,7 @@ def simhash_candidates(fp: DataFrame, *, bucket_cap: int = BAND_BUCKET_CAP,
     single-job equivalent."""
     banded = materialize(simhash_banded(fp), "simhash_candidates:banded")
     kept = banded.join(
-        F.broadcast(simhash_hot_buckets(banded, bucket_cap).select("band", "bucket")),
+        F.broadcast(lsh_hot_buckets(banded, bucket_cap).select("band", "bucket")),
         ["band", "bucket"],
         "left_anti",
     )
@@ -1111,11 +1079,8 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != ""
-    )
     stream = docs.select(
-        "doc_id", F.posexplode(toks).alias("pos", "w")
+        "doc_id", F.posexplode(terms("text")).alias("pos", "w")
     ).withColumn(
         "is_boundary",
         (F.substring(F.md5("w"), 1, 1) == CDC_BOUNDARY_HEX).cast("int"),
@@ -1294,15 +1259,8 @@ def dedup_simhash_portable(
     from itertools import combinations
 
     docs = t(spark, sf_dir, "documents")
-    toks = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), TOKEN_PATTERN)).alias(
-                "tok"
-            ),
-        )
-        .filter(F.col("tok") != "")
-        .select("doc_id", _md5_hash60(F.col("tok"), "t").alias("h"))
+    toks = tokenize(docs, "text", ["doc_id"]).select(
+        "doc_id", _md5_hash60(F.col("term"), "t").alias("h")
     )
     sums_sql = ", ".join(
         f"sum(shiftrightunsigned(h, {b}) & 1L)" for b in range(PSIM_BITS)

@@ -5,11 +5,36 @@ Spark SQL; BASELINE.json:6).
 C6 tokenization is pure Spark SQL (split/lower/explode — no UDF); C5
 search is two tiers: a predicate scan (oracle-checkable ILIKE) and a
 tokens inverted index with TF ranking + deterministic top-k.
+
+This module is the ONE definition of C6, "text → terms (lowercase,
+split on non-alnum)", for every text operator in the package (serving,
+textstats, dedup, curation): no other module splits on
+``TOKEN_PATTERN`` or hand-writes the k-gram position explode, except
+the Python-side Misra-Gries pass of ``textstats.heavy_hitters``, whose
+pandas workers cannot evaluate a Column (``tests/test_tokenizer.py``
+guards this). The policy comes in three forms because the consumers
+need three shapes:
+
+- ``terms(col)``: the in-row term array with ``""`` dropped — the BM25
+  / tf / dl / quality-metric form (``size(terms)`` is the token count,
+  so ``dl == sum(tf)`` holds by construction).
+- ``tokenize(df, text_col, id_cols)``: one ``term`` row per term; the
+  empty filter runs after the explode, the shape of the DuckDB twins'
+  ``unnest`` + ``WHERE w <> ''``.
+- ``split_terms(col)``: the raw split that KEEPS ``""``. Shingles, the
+  heavy-hitter k-grams and their DuckDB twins
+  (``regexp_split_to_array``) and the Python-side Misra-Gries pass
+  (``re.split``) all count k-grams over this array; for text with
+  leading or trailing punctuation it differs from ``terms`` (``"--a b"``
+  splits to ``["", "a", "b"]``), so the two are not interchangeable.
+
+``kgrams`` is the one k-gram expansion over an already-bound token
+array column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tableio import TableIO
@@ -18,27 +43,51 @@ from .io_util import materialize, overlap, t
 TOKEN_PATTERN = "[^a-z0-9]+"
 
 
+def split_terms(col: Column | str) -> Column:
+    """C6 raw split: ``split(lower(col), TOKEN_PATTERN)`` with its
+    empty strings kept (a leading/trailing separator yields a ``""``
+    end element, as in DuckDB's ``regexp_split_to_array`` and Python's
+    ``re.split``). The array the k-gram consumers count over."""
+    return F.split(F.lower(col), TOKEN_PATTERN)
+
+
+def terms(col: Column | str) -> Column:
+    """C6 term array: ``split_terms`` with ``""`` dropped, unsorted.
+    Identical to the DuckDB twin
+    ``list_filter(regexp_split_to_array(lower(s), '[^a-z0-9]+'), x -> x <> '')``."""
+    return F.filter(split_terms(col), lambda x: x != "")
+
+
 def tokenize(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFrame:
     """C6 — text → (id..., term) rows; lowercase, split on non-alnum,
-    empties dropped. Identical semantics to the DuckDB twin
-    regexp_split_to_array(lower(text), '[^a-z0-9]+')."""
+    empties dropped after the explode. Identical semantics to the
+    DuckDB twin ``unnest(regexp_split_to_array(lower(text),
+    '[^a-z0-9]+'))`` filtered on ``<> ''``."""
     return (
-        df.select(*id_cols, F.explode(F.split(F.lower(F.col(text_col)), TOKEN_PATTERN)).alias("term"))
+        df.select(*id_cols, F.explode(split_terms(text_col)).alias("term"))
         .filter(F.col("term") != "")
     )
 
 
-def _filtered_terms(text_col: str):
-    """Unsorted array of a row's terms — THE tokenizer expression shared
-    by term_frequencies (which sorts it for the RLE) and doc_lengths_of
-    (size is order-invariant, so it skips the per-row sort), so
-    'dl == sum(tf)' holds by construction, not by parallel maintenance
-    of two tokenizers."""
-    return F.filter(F.split(F.lower(F.col(text_col)), TOKEN_PATTERN), lambda x: x != "")
+def kgrams(df: DataFrame, k: int, keep: list[str]) -> tuple[DataFrame, list[Column]]:
+    """The one k-gram expansion: one row per k-gram start of the BOUND
+    token-array column ``L`` — ``(keep..., i, L)`` with 1-based start
+    ``i`` — and the k ``element_at(L, i + j)`` part columns to build
+    the gram from. Returns ``(rows, parts)``; the caller applies its
+    own final expression (``concat_ws``, ``xxhash64``, a ``slice``).
 
-
-def _term_array(text_col: str):
-    return F.array_sort(_filtered_terms(text_col))
+    The explode runs over the cheap ``sequence()`` so the Generate
+    stays codegen'd. ``L`` must be a column already projected by the
+    caller, never a ``split()`` expression: embedding the split inside
+    a lambda or an exploded higher-order array re-evaluates it per
+    element (measured 2.8 s → 19 s on ``dedup_ngram_jaccard`` and
+    2.3 s → 20 s on ``decontaminate_bloom``). Guard: rows with
+    fewer than k tokens must be filtered by the caller
+    (``sequence(1, 0)`` would count DOWN)."""
+    rows = df.select(
+        *keep, F.explode(F.sequence(F.lit(1), F.size("L") - (k - 1))).alias("i"), "L"
+    )
+    return rows, [F.element_at(F.col("L"), F.col("i") + j) for j in range(k)]
 
 
 def doc_lengths_of(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFrame:
@@ -53,7 +102,7 @@ def doc_lengths_of(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFram
     exchange left in the doc_lengths stage is the bucket-by-conv write.
     Rows with zero tokens are omitted — they have no postings, matching
     the groupBy form."""
-    n = F.size(_filtered_terms(text_col))
+    n = F.size(terms(text_col))
     return df.select(*id_cols, n.cast("long").alias("dl")).filter(F.col("dl") > 0)
 
 
@@ -87,8 +136,7 @@ def term_frequencies(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFr
     exchange left in the tokens stage is the bucket-by-term write.
     Equality with the groupBy form is pinned in tests/test_sql_serving.
     """
-    terms = _term_array(text_col)
-    df = df.select(*id_cols, terms.alias("_terms"))
+    df = df.select(*id_cols, F.array_sort(terms(text_col)).alias("_terms"))
     n = F.size("_terms")
     # 0-based indices where a new run starts (ANSI: element_at is 1-based)
     starts = F.filter(
@@ -182,10 +230,7 @@ def positional_postings(df: DataFrame, text_col: str, id_cols: list[str]) -> Dat
     position in the empty-filtered token stream). The committed form of
     this table (bucketed by term, like the tf tokens table) is what
     phrase/proximity serving reads at scale."""
-    arr = F.filter(
-        F.split(F.lower(F.col(text_col)), TOKEN_PATTERN), lambda x: x != ""
-    )
-    return df.select(*id_cols, F.posexplode(arr).alias("pos", "term"))
+    return df.select(*id_cols, F.posexplode(terms(text_col)).alias("pos", "term"))
 
 
 def phrase_search(docs: DataFrame, phrase: tuple[str, ...],
@@ -250,11 +295,8 @@ def c6_tokenize_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     (term, partial-count) rows (0.23s measured, and at corpus scale
     the exchange carries vocabulary-sized data, not token-sized)."""
     docs = t(spark, sf_dir, "documents")
-    arr = F.array_distinct(
-        F.filter(F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != "")
-    )
     return (
-        docs.select(F.explode(arr).alias("term"))
+        docs.select(F.explode(F.array_distinct(terms("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
     )
@@ -391,9 +433,7 @@ def c5_search_bm25_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFr
     doc_lengths + corpus_stats tables instead (c5_search_bm25_indexed;
     equality pinned in tests/test_sql_serving.py)."""
     docs = t(spark, sf_dir, "documents")
-    terms_arr = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != ""
-    )
+    terms_arr = terms("text")
     dl = docs.select("doc_id", F.size(terms_arr).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -740,9 +780,7 @@ def c5_search_bm25_batch(spark: SparkSession, sf_dir: str,
     from pyspark.sql import Window
 
     docs = t(spark, sf_dir, "documents")
-    terms_arr = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != ""
-    )
+    terms_arr = terms("text")
     # r6 (guide §2.4, §5): dl, qterms and tf each feed two consumers
     # (dl → corpus stats + the score join; qterms → the semi-join
     # pruner + the score fan-out; tf → document frequencies + scores),

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .io_util import materialize, t
-from .serving import TOKEN_PATTERN
+from .serving import kgrams, split_terms, terms, tokenize
 
 # deterministic stopword-hit language heuristic (mirrored in SQL)
 EN_MARKERS = (" the ", " a ", " data ", " fast ")
@@ -44,10 +44,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: token count, mean token length, alpha ratio,
     and a bucket — the length/punct/stopword-ratio family."""
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != ""
-    )
-    n_tokens = F.size(toks).cast("int")
+    n_tokens = F.size(terms("text")).cast("int")
     alpha_chars = F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z]", ""))
     alpha_ratio = F.round(alpha_chars / F.length("text"), 4)
     mean_tok_len = F.round(alpha_chars / n_tokens, 4)
@@ -69,9 +66,7 @@ def text_token_count_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token accounting per (lang, source): total/mean tokens —
     the budgeting query every training-data pipeline runs."""
     docs = t(spark, sf_dir, "documents")
-    n_tokens = F.size(
-        F.filter(F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != "")
-    )
+    n_tokens = F.size(terms("text"))
     return docs.groupBy("lang").agg(
         F.sum(n_tokens).cast("long").alias("total_tokens"),
         F.round(F.avg(n_tokens), 4).alias("avg_tokens"),
@@ -150,8 +145,7 @@ def pack_context_windows(spark: SparkSession, sf_dir: str,
     from pyspark.sql import Window as W
 
     docs = t(spark, sf_dir, "documents")
-    ntok = F.size(F.filter(F.split(F.lower(F.col("text")), TOKEN_PATTERN),
-                           lambda x: x != ""))
+    ntok = F.size(terms("text"))
     w = W.partitionBy("lang").orderBy("doc_id")
     cum = F.sum("n_tokens").over(w)
     return (
@@ -181,8 +175,7 @@ def pack_context_windows_greedy(
     import pandas as pd
 
     docs = t(spark, sf_dir, "documents")
-    ntok = F.size(F.filter(F.split(F.lower(F.col("text")), TOKEN_PATTERN),
-                           lambda x: x != ""))
+    ntok = F.size(terms("text"))
     base = docs.select("doc_id", "lang", ntok.cast("long").alias("n_tokens"))
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -223,9 +216,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one double add per bigram; ppl rounds to 4dp (measure-zero
     boundary risk, same discipline as every avg twin here)."""
     docs = t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != ""
-    )
+    toks = terms("text")
     base = docs.select("doc_id", toks.alias("L")).filter(F.size("L") >= 2)
     arr = F.col("L")
     bigs = base.select(
@@ -306,11 +297,8 @@ def _bpe_train(docs, text_col: str = "text", rounds: int = 3):
     kernel used to re-tokenize the corpus, re-distinct the words and
     re-run the replace chain to rebuild exactly this table)."""
     words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), TOKEN_PATTERN)).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .groupBy("w")
+        tokenize(docs, text_col, [])
+        .groupBy(F.col("term").alias("w"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     # "cat" -> " c a t " (space-padded symbol string)
@@ -401,10 +389,7 @@ def _bpe_word_stream_and_codes(docs):
     (tokenization is the same expression, so the distinct-word sets
     and padded strings are equal by construction)."""
     _merges, cur = _bpe_train(docs, "text", rounds=3)
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != ""
-    )
-    dw = docs.select("doc_id", "lang", F.explode(toks).alias("w"))
+    dw = docs.select("doc_id", "lang", F.explode(terms("text")).alias("w"))
     enc = cur.select(
         "w", F.size(F.split(F.trim(F.col("s")), " ")).cast("int").alias("n_sym")
     )
@@ -487,12 +472,15 @@ def heavy_hitters(
     ``ann_lsh_bucketed``'s corpus_count) to have the bound CHECKED
     rather than trusted.
 
-    Tokenization mirrors the repo-wide ``TOKEN_PATTERN`` split exactly
-    (Python ``re.split`` on the same pattern keeps leading/trailing
+    Tokenization mirrors ``serving.split_terms`` exactly (Python
+    ``re.split`` on the same ``TOKEN_PATTERN`` keeps leading/trailing
     empties like Spark's ``split(..., -1)`` and DuckDB's
     ``regexp_split_to_array``), so pass-1 counts and pass-2/oracle
     counts see the same n-gram multiset — the superset guarantee
-    depends on it."""
+    depends on it. This Python-side pass is the one C6 copy outside
+    ``serving``: a pandas worker cannot evaluate a Column."""
+    from .serving import TOKEN_PATTERN
+
     if total_grams is not None and (capacity + 1) * min_count <= total_grams:
         raise ValueError(
             f"MG guarantee violated: need min_count > total_grams/(capacity+1) "
@@ -537,17 +525,10 @@ def heavy_hitters(
         docs.select("text").mapInPandas(mg_partition, "ngram string").distinct()
     )
 
-    L = F.split(F.lower(F.col("text")), TOKEN_PATTERN)
-    parts = [F.element_at(F.col("L"), F.col("i") + j) for j in range(k)]
-    grams = (
-        docs.select(L.alias("L"))
-        .filter(F.size("L") >= k)
-        .select(
-            F.explode(F.sequence(F.lit(1), F.size("L") - (k - 1))).alias("i"),
-            "L",
-        )
-        .select(F.concat_ws(" ", *parts).alias("ngram"))
+    rows, parts = kgrams(
+        docs.select(split_terms("text").alias("L")).filter(F.size("L") >= k), k, []
     )
+    grams = rows.select(F.concat_ws(" ", *parts).alias("ngram"))
     return (
         grams.join(F.broadcast(cand), "ngram", "left_semi")
         .groupBy("ngram")
@@ -566,8 +547,8 @@ def documents_total_grams(spark, sf_dir: str, k: int = HH_NGRAM_K) -> int:
     production this is a committed corpus-stats table scalar (the
     pipeline's ``corpus_stats`` stage pattern), refreshed per ingest —
     never recomputed per query. The gram census uses the SAME split
-    as both heavy-hitter passes (``split(lower(text), TOKEN_PATTERN)``
-    keeping empties), so the bound it feeds is over exactly the
+    as both heavy-hitter passes (``serving.split_terms``, which keeps
+    empties), so the bound it feeds is over exactly the
     multiset the MG summary sees. The memo stores ONE (stamp, n) entry
     per (sf_dir, k), validated against the parquet file's current
     mtime/size — a regenerated or appended documents table misses and
@@ -589,7 +570,7 @@ def documents_total_grams(spark, sf_dir: str, k: int = HH_NGRAM_K) -> int:
     hit = _TOTAL_GRAMS_CACHE.get(key)
     if hit is not None and stamp is not None and hit[0] == stamp:
         return hit[1]
-    L = F.split(F.lower(F.col("text")), TOKEN_PATTERN)
+    L = split_terms("text")
     row = (
         t(spark, sf_dir, "documents")
         .select(F.greatest(F.size(L) - (k - 1), F.lit(0)).alias("g"))
@@ -717,11 +698,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str,
     if top_r < 2:
         raise ValueError(f"text_zipf_fit needs top_r >= 2, got {top_r}")
     docs = t(spark, sf_dir, "documents")
-    terms = F.filter(
-        F.split(F.lower(F.col("text")), TOKEN_PATTERN), lambda x: x != ""
-    )
     freq = (
-        docs.select(F.explode(terms).alias("term"))
+        docs.select(F.explode(terms("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.desc("freq"), F.asc("term"))

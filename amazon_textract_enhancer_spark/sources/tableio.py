@@ -5,7 +5,9 @@ vendor/textract-service-2.json:1553-1558 ClientRequestToken semantics).
 
 Commit protocol (atomic on POSIX rename; crash-safe at every step):
 
-1. write parquet to ``<table>/.tmp-<nonce>/``
+1. write parquet to ``<table>/tmp-<nonce>/`` — a name without a
+   leading ``.`` or ``_``, because Spark's file index treats such names
+   as hidden and the commit reads its own files back from this dir
 2. fsync-equivalent barrier (Spark job completion)
 3. **invalidate**: delete ``<table>/_manifest.json`` — from here until
    step 6 the stage is uncommitted, so a crash forces a clean re-run
@@ -26,11 +28,14 @@ Commit protocol (atomic on POSIX rename; crash-safe at every step):
    rename it to ``snap-<prev_seq>/`` and record it in the append-only
    ``_snapshots.json`` log: the Iceberg snapshot-history analog, read
    back via ``read_table(..., as_of=seq)`` (``VERSION AS OF``),
-   ``rollback_to`` and ``expire_snapshots``
+   ``rollback_to`` and ``expire_snapshots``. A crash before this step
+   leaves ``tmp-*``/``.old-*`` dirs; the next commit of the table
+   deletes them (and the ``.tmp-*`` staging dirs of older versions)
+   before it writes
 
 A re-run with the same (stage, input_snapshot, config_hash) finds the
 manifest and SKIPS the stage — that is the resume path. A killed job
-leaves only ``.tmp-*``/``.old-*`` dirs (garbage-collected by the next
+leaves only ``tmp-*``/``.old-*`` dirs (garbage-collected by the next
 run) and possibly no manifest (→ re-run); a manifest, when present,
 always describes complete data.
 
@@ -185,9 +190,10 @@ class TableIO:
 
         tpath = self.table_path(name)
         os.makedirs(tpath, exist_ok=True)
-        # GC half-written tmp/old dirs from killed runs
+        # GC half-written tmp/old dirs from killed runs (``.tmp-`` is the
+        # staging name older versions used)
         for d in os.listdir(tpath):
-            if d.startswith(".tmp-") or d.startswith(".old-"):
+            if d.startswith(("tmp-", ".tmp-", ".old-")):
                 shutil.rmtree(os.path.join(tpath, d), ignore_errors=True)
 
         if bucket_col is not None and not pre_bucketed:
@@ -198,7 +204,7 @@ class TableIO:
             df = df.sortWithinPartitions(*sort_within)
 
         nonce = uuid.uuid4().hex[:12]
-        tmp = os.path.join(tpath, f".tmp-{nonce}")
+        tmp = os.path.join(tpath, f"tmp-{nonce}")
         writer = df.write.mode("overwrite")
         if partition_by is not None:
             writer = writer.partitionBy(partition_by)

@@ -27,6 +27,29 @@ from ..sources.tableio import TableIO
 from ..stages import extract_spans
 
 
+def _text_fp():
+    """Content fingerprint of a turn for exact dedup: md5 of
+    ``lower(coalesce(text, ''))``."""
+    return F.md5(F.lower(F.coalesce("text", F.lit(""))))
+
+
+def _run_available_now(df: DataFrame, output_dir: str, checkpoint_dir: str) -> None:
+    """The one availableNow parquet sink of this module: append ``df``
+    to ``output_dir`` with its offsets and state in ``checkpoint_dir``
+    (exactly-once across restarts), process everything present and
+    return once the query terminates."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    (
+        df.writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def conv_fingerprints(transcripts: DataFrame) -> DataFrame:
     """(conv_id, fp): order-insensitive per-conversation content hash —
     the change-detection key for snapshot diffing."""
@@ -151,19 +174,11 @@ def stream_extract(
     processes all files present, commits exactly-once, terminates."""
     from ..schemas import TRANSCRIPT_SCHEMA
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
     )
     spans = extract_spans(stream)
-    q = (
-        spans.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(spans, output_dir, checkpoint_dir)
 
 
 def stream_windowed_counts(
@@ -183,9 +198,6 @@ def stream_windowed_counts(
     this is the Structured Streaming shape its incrementality maps to
     when input arrives as files; SURVEY.md §2.E 'Streaming' row.)
     """
-    from pyspark.sql import functions as F
-
-    os.makedirs(checkpoint_dir, exist_ok=True)
     events = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -201,15 +213,7 @@ def stream_windowed_counts(
             "n",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(agg, output_dir, checkpoint_dir)
 
 
 def stream_stateful_conv_progress(
@@ -265,7 +269,6 @@ def stream_stateful_conv_progress(
             {"conv_id": [key[0]], "turns_seen": [turns], "chars_seen": [chars]}
         )
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
     progress = stream.groupBy("conv_id").applyInPandasWithState(
         update,
@@ -274,15 +277,7 @@ def stream_stateful_conv_progress(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        progress.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(progress, output_dir, checkpoint_dir)
 
 
 def stream_dedup_exact(
@@ -308,27 +303,16 @@ def stream_dedup_exact(
     horizon's worth of distinct fingerprints, and the fingerprint is
     computed map-side before the stateful exchange.
     """
-    from pyspark.sql import functions as F
-
     from ..schemas import TRANSCRIPT_SCHEMA
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(input_dir)
     deduped = (
-        stream.withColumn("fp", F.md5(F.lower(F.coalesce("text", F.lit("")))))
+        stream.withColumn("fp", _text_fp())
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["fp"])
         .drop("fp")
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(deduped, output_dir, checkpoint_dir)
 
 
 def stream_join_call_results(
@@ -359,9 +343,6 @@ def stream_join_call_results(
     across restarts because both watermark and buffered state live in
     the checkpoint.
     """
-    from pyspark.sql import functions as F
-
-    os.makedirs(checkpoint_dir, exist_ok=True)
     calls = (
         spark.readStream.schema(
             "call_id long, conv_id string, tool string, ts timestamp"
@@ -389,15 +370,7 @@ def stream_join_call_results(
         results["rts"].alias("result_ts"),
         (F.unix_timestamp("rts") - F.unix_timestamp("ts")).alias("latency_s"),
     )
-    q = (
-        joined.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(joined, output_dir, checkpoint_dir)
 
 
 def compact_stream_landing(
@@ -489,14 +462,10 @@ def index_dedup_batch(
     dir, and the index recommit is a manifest no-op (same
     (input_snapshot, config_hash)). Nothing double-drops, nothing
     double-emits."""
-    from ..schemas import TRANSCRIPT_SCHEMA  # noqa: F401  (schema doc)
-
     def _batch(batch_df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Window
 
-        fp = batch_df.withColumn(
-            "fp", F.md5(F.lower(F.coalesce("text", F.lit(""))))
-        )
+        fp = batch_df.withColumn("fp", _text_fp())
         w = Window.partitionBy("fp").orderBy("conv_id", "turn_idx")
         firsts = (
             fp.withColumn("_rn", F.row_number().over(w))

@@ -333,9 +333,39 @@ def test_crash_mid_commit_leaves_no_stale_manifest(spark, transcripts_df, wareho
     assert io.read_table(spark, "extracted_spans").count() == m["rows"]
     leftovers = [
         d for d in os.listdir(io.table_path("extracted_spans"))
-        if d.startswith(".tmp-") or d.startswith(".old-")
+        if d.startswith(("tmp-", ".tmp-", ".old-"))
     ]
     assert leftovers == []
+
+
+def test_crash_after_write_leaves_visible_staging_dir_that_next_commit_reaps(
+    spark, transcripts_df, warehouse, monkeypatch
+):
+    """A crash after the parquet write, before the staged files move
+    into data/, leaves the staging dir behind. Its name must not start
+    with '.' or '_' (Spark treats those as hidden, and the commit reads
+    its own files back from there), and the next commit must delete it."""
+    io = TableIO(warehouse)
+    spans = extract_spans(transcripts_df)
+    tpath = io.table_path("extracted_spans")
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected crash after the parquet write")
+
+    monkeypatch.setattr("amazon_textract_enhancer_spark.sources.tableio.os.replace", boom)
+    with pytest.raises(RuntimeError):
+        io.commit_stage(spans, "extracted_spans", "snapA", "v1")
+    monkeypatch.undo()
+
+    staged = [d for d in os.listdir(tpath) if "tmp-" in d]
+    assert len(staged) == 1
+    assert not staged[0].startswith((".", "_")), staged
+    assert any(f.endswith(".parquet") for f in os.listdir(os.path.join(tpath, staged[0])))
+    assert io.read_manifest("extracted_spans") is None
+
+    m = io.commit_stage(spans, "extracted_spans", "snapA", "v1")
+    assert m["rows"] == transcripts_df.count()
+    assert not any("tmp-" in d for d in os.listdir(tpath))
 
 
 def test_streaming_available_now(spark, tmp_path):

@@ -23,10 +23,10 @@ from amazon_textract_enhancer_spark.operators.dedup import (
     dedup_ngram_jaccard,
     dedup_simhash,
     dedup_simhash_pairs,
+    lsh_hot_buckets as simhash_hot_buckets,
     simhash_banded,
     simhash_candidates,
     simhash_fingerprints,
-    simhash_hot_buckets,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
