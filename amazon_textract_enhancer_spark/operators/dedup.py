@@ -30,14 +30,10 @@ index build).
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io_util import materialize, overlap, t
-# re-exported for the brute-force reference in tests/test_dedup_skew.py
-from .serving import TOKEN_PATTERN  # noqa: F401
 from .serving import kgrams, split_terms, terms, tokenize
 
 N_MINHASH = 16  # signature length

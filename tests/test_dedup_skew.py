@@ -195,6 +195,7 @@ def test_simhash_portable_banding_is_pigeonhole_complete(spark):
     import pyspark.sql.functions as F
 
     from amazon_textract_enhancer_spark.operators import dedup as D
+    from amazon_textract_enhancer_spark.operators import serving
 
     sf = "/root/testdata/sf0.01"
     got = {
@@ -207,7 +208,7 @@ def test_simhash_portable_banding_is_pigeonhole_complete(spark):
         docs.select(
             "doc_id",
             F.explode(
-                F.split(F.lower(F.col("text")), D.TOKEN_PATTERN)
+                F.split(F.lower(F.col("text")), serving.TOKEN_PATTERN)
             ).alias("tok"),
         )
         .filter(F.col("tok") != "")

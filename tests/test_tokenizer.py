@@ -61,16 +61,14 @@ def _heavy_hitters_lines() -> range:
 def test_c6_tokenizer_only_in_serving():
     """Outside ``operators/serving.py`` no package file splits text on
     the C6 pattern or hand-writes the k-gram position explode; the
-    pattern itself appears only there, in the Python-side heavy-hitter
-    pass and in the one re-export ``dedup.TOKEN_PATTERN`` that the
-    brute-force reference of ``tests/test_dedup_skew.py`` reads."""
+    pattern itself appears only there and in the Python-side
+    heavy-hitter pass."""
     split_pat = re.compile(r"F\.split\(\s*F\.lower\(|F\.split\([^)]*TOKEN_PATTERN")
     kgram_pat = re.compile(
         r"F\.explode\(\s*F\.sequence\(\s*F\.lit\(1\),\s*F\.size\([^()]*\)\s*-"
         r"|F\.element_at\([^()]*,\s*F\.col\(\"i\"\)\s*\+"
     )
     hh_lines = _heavy_hitters_lines()
-    reexport = "from .serving import TOKEN_PATTERN  # noqa: F401"
     offenders = []
     for p in PKG.rglob("*.py"):
         rel = p.relative_to(PKG)
@@ -82,8 +80,7 @@ def test_c6_tokenizer_only_in_serving():
                 offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1}")
         for n, line in enumerate(text.splitlines(), 1):
             if "TOKEN_PATTERN" in line and not (
-                (rel == Path("operators/textstats.py") and n in hh_lines)
-                or (rel == Path("operators/dedup.py") and line.startswith(reexport))
+                rel == Path("operators/textstats.py") and n in hh_lines
             ):
                 offenders.append(f"{rel}:{n}")
     assert not offenders, offenders
