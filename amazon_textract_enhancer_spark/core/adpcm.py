@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import struct
 
+from .wav import riff_wave
+
 STEP_TABLE = [
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
     37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143,
@@ -151,9 +153,4 @@ def encode_wav_adpcm(sample_rate: int, samples: list[int],
         // samples_per_block
     fmt = struct.pack("<HHIIHHHH", 0x11, 1, sample_rate, byte_rate,
                       block_align, 4, 2, samples_per_block)
-    fact = struct.pack("<I", len(samples))
-    body = (b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<I", len(fact)) + fact
-            + b"data" + struct.pack("<I", len(data)) + data)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return riff_wave(fmt, data, fact=struct.pack("<I", len(samples)))

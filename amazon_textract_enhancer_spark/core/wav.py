@@ -3,8 +3,10 @@ core/png.py. Supports 16-bit signed little-endian PCM (format 1) AND
 G.711 µ-law (format 7, 8-bit log-companded — a real compressed
 telephony codec, 2:1, implemented here bit-for-bit per the G.711
 spec). Any channel count / sample rate; standard RIFF chunk walking
-(extra chunks like LIST/fact are skipped). Perceptual codecs (MP3/
-AAC/…) stay behind the disclosed stub seam in operators/multimodal.py.
+(extra chunks like LIST are skipped). ``riff_wave`` is the one
+container writer, shared with the IMA ADPCM encoder (core/adpcm.py).
+Perceptual codecs (MP3/AAC/…) stay behind the disclosed stub seam in
+operators/multimodal.py.
 """
 
 from __future__ import annotations
@@ -43,21 +45,25 @@ def mulaw_expand(b: int) -> int:
     return -x if sign else x
 
 
+def riff_wave(fmt: bytes, data: bytes, fact: bytes | None = None) -> bytes:
+    """The one RIFF/WAVE container writer: a ``fmt `` chunk (packed by
+    the caller, format arithmetic included), an optional ``fact`` chunk
+    and the ``data`` chunk, each length-prefixed, in that order."""
+    chunks = ([(b"fmt ", fmt)] + ([] if fact is None else [(b"fact", fact)])
+              + [(b"data", data)])
+    body = b"WAVE" + b"".join(tag + struct.pack("<I", len(c)) + c for tag, c in chunks)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def encode_wav(sample_rate: int, channels: int, samples: list[int]) -> bytes:
     """samples: interleaved signed 16-bit ints (len divisible by
     channels)."""
     if len(samples) % channels:
         raise ValueError("sample count not divisible by channel count")
-    data = struct.pack(f"<{len(samples)}h", *samples)
     byte_rate = sample_rate * channels * 2
     fmt = struct.pack("<HHIIHH", 1, channels, sample_rate, byte_rate,
                       channels * 2, 16)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return riff_wave(fmt, struct.pack(f"<{len(samples)}h", *samples))
 
 
 def encode_wav_mulaw(sample_rate: int, channels: int,
@@ -66,16 +72,10 @@ def encode_wav_mulaw(sample_rate: int, channels: int,
     (8 bits on the wire — half the PCM byte rate)."""
     if len(samples) % channels:
         raise ValueError("sample count not divisible by channel count")
-    data = bytes(mulaw_compress(s) for s in samples)
     byte_rate = sample_rate * channels
     fmt = struct.pack("<HHIIHH", 7, channels, sample_rate, byte_rate,
                       channels, 8)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return riff_wave(fmt, bytes(mulaw_compress(s) for s in samples))
 
 
 def decode_wav(payload: bytes) -> tuple[int, int, list[int]]:

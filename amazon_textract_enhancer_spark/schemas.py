@@ -48,8 +48,6 @@ RELATIONSHIP_TYPES = frozenset(
 # SelectionStatus [SVC:3164-3170]; TextType [SVC:3453-3459]
 SELECTION_STATUSES = frozenset({"SELECTED", "NOT_SELECTED"})
 TEXT_TYPES = frozenset({"HANDWRITING", "PRINTED"})
-# JobStatus [SVC:2614-2621]
-JOB_STATUSES = frozenset({"IN_PROGRESS", "SUCCEEDED", "FAILED", "PARTIAL_SUCCESS"})
 
 # --- input: north-rule transcript table (BASELINE.json:15) ------------
 TRANSCRIPT_SCHEMA = StructType(
@@ -196,16 +194,6 @@ EXTRACTED_TURNS_SCHEMA = StructType(
     list(EXTRACTED_SPANS_SCHEMA.fields)
     + [StructField("blocks", ArrayType(BLOCK_SCHEMA, False), True),
        StructField("nodes", ArrayType(NODE_SCHEMA, False), True)]
-)
-
-# tokens inverted-index table (A9/C5-ii): (term, conv_id, turn_idx, tf)
-TOKENS_SCHEMA = StructType(
-    [
-        StructField("term", StringType(), False),
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("tf", IntegerType(), False),
-    ]
 )
 
 # paginated raw-response chunks (B11/B14 ingest fixture): one Textract-

@@ -238,7 +238,8 @@ def test_mm_codec_chains_never_shuffle_payloads(spark):
 
     for name in ("mm_image_stats", "mm_audio_stats", "mm_video_stats",
                  "mm_gif_stats", "mm_mulaw_stats", "mm_video_rle_stats",
-                 "mm_jpeg_stats", "mm_jpeg_color_stats", "mm_adpcm_stats"):
+                 "mm_jpeg_stats", "mm_jpeg_color_stats", "mm_adpcm_stats",
+                 "mm_audio_downsample"):
         df = _q(spark, name)
         assert n_exchanges(df) <= 1, (name, executed_plan(df))
         assert "MapInArrow" in executed_plan(df), name

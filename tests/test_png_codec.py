@@ -81,6 +81,22 @@ def test_decode_seam_rejects_non_png():
     assert (w, h, ch) == (2, 2, 3) and px == bytes(12)
 
 
+def test_multimodal_has_one_arrow_stage():
+    """Every mm_* encode and decode stage goes through ``_map_rows``:
+    the file holds one ``mapInArrow`` call and one record-batch
+    builder, and one ``(doc_id, payload)`` schema."""
+    import re
+    from pathlib import Path
+
+    from amazon_textract_enhancer_spark.operators import multimodal
+
+    src = Path(multimodal.__file__).read_text()
+    assert src.count("mapInArrow(") == 1
+    assert src.count("RecordBatch.from_arrays(") == 1
+    for gone in ("_synth_ids", "PNG_SCHEMA", "WAV_SCHEMA", "Y4M_SCHEMA"):
+        assert not re.search(rf"\b{gone}\b", src), gone
+
+
 # ---------------------------------------------------------------- WAV
 def test_wav_roundtrip_and_chunk_walking():
     import struct as _struct
