@@ -23,7 +23,6 @@ REL_MERGED_CELL = "MERGED_CELL"
 
 # SelectionStatus enum — vendor/textract-service-2.json:3164-3170
 SELECTED = "SELECTED"
-NOT_SELECTED = "NOT_SELECTED"
 
 
 def build_block_map(blocks: list[dict]) -> dict[str, dict]:

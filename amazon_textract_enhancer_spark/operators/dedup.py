@@ -5,6 +5,33 @@ relational, oracle-checked), MinHash+LSH (shingle→minhash→band→
 bucket-join, ALL Spark built-ins, no UDF), SimHash (bitwise majority
 over token hashes).
 
+The five hash-based near-dup miners (``dedup_minhash_lsh``,
+``dedup_minhash_portable``, ``dedup_simhash``, ``dedup_simhash_pairs``,
+``dedup_simhash_portable``) differ only in their hash family and
+geometry; each states those and composes the same candidate-and-verify
+steps, every one written once here:
+
+- ``_hot_keys`` — the ``groupBy(keys).count > cap`` skew list (behind
+  ``lsh_hot_buckets``, ``shingle_df_dropped`` and the incremental
+  existing-side shingle cap);
+- ``_band_pairs`` — the broadcast hot-bucket anti-join plus the
+  ``(band, bucket)`` self-join on ``a.doc_id < b.doc_id``;
+- ``_minhash_bands`` — the one-explode LSH banding of a minhash
+  profile, with the bucket expression as an argument;
+- ``_verify_jaccard`` / ``_jaccard_at_least`` — the profile
+  ``array_intersect`` verify and the rounded Jaccard ratio with its
+  threshold filter (also used by ``dedup_ngram_jaccard`` and
+  ``dedup_incremental``);
+- ``_majority_fp`` / ``_manku_keys`` / ``_hamming_pairs`` — the SimHash
+  bitwise-majority fingerprint over ``(doc_id, h)``, the Manku
+  block-combination keys and the hamming-verified band pairs, each with
+  its geometry as arguments;
+- ``_clusters`` / ``_ngram_labels`` — cluster rows from CC labels and
+  the n-gram-Jaccard → ``connected_components`` labels.
+
+The DuckDB twins of the ``*_portable`` miners replay the whole chain
+independently, so they pin exactly the plumbing the fast miners run.
+
 Scale notes (100 TB): every step is expression-level (whole-stage
 codegen) — shingling via transform/sequence, hashing via xxhash64.
 The only shuffles are the groupBys/joins on (shingle|band|fingerprint),
@@ -30,7 +57,9 @@ index build).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from itertools import combinations
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io_util import materialize, overlap, t
@@ -72,33 +101,15 @@ def _shingles_raw(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFram
     return rows.select("doc_id", F.concat_ws(" ", *parts).alias("shingle"))
 
 
-def _shingle_hashes_raw(
-    df: DataFrame, text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """(doc_id, sh) with within-document duplicates, where ``sh`` is
-    the int64 xxhash64 of the k token columns — for consumers that only
-    GROUP or COUNT shingles and never read them back as text (the
-    ngram-Jaccard inverted index). Hashing map-side shrinks the one
-    shuffle from (doc_id, ~20-30B string) to (doc_id, 8B long) and
-    skips the concat_ws string build entirely; output Jaccard values
-    are unchanged unless two distinct shingles collide in 64 bits
-    (birthday bound ~n²/2⁶⁵ ≈ 2e-9 at the sf0.1 shingle count, and
-    still <1e-3 at 10¹² shingles — and a collision only ever MERGES two
-    posting lists, overcounting one intersection by 1)."""
-    base = df.select("doc_id", split_terms(text_col).alias("L"))
-    rows, parts = kgrams(base.filter(F.size("L") >= k), k, ["doc_id"])
-    return rows.select("doc_id", F.xxhash64(*parts).alias("sh"))
-
-
 def _shingle_hash_array(L_col: str = "L", k: int = 3):
     """In-row expression: the DISTINCT int64 shingle-hash array of one
     document (r6, guide §2.3/§2.4). A document is ONE source row, so
     its shingle set — and therefore its set size and any per-document
     aggregate of it — needs no shuffle at all: ``array_distinct`` over
     a ``transform`` replaces the explode → groupBy(doc_id) round-trip.
-    Hash values are byte-identical to ``_shingle_hashes_raw`` (same
-    xxhash64 over the same k token columns), so consumers see the same
-    sets.
+    Hash values are byte-identical to the ``kgrams`` posting-list keys
+    of ``dedup_ngram_jaccard`` (same xxhash64 over the same k token
+    columns), so consumers see the same sets.
 
     ``L_col`` must be a BOUND column holding the token array (split
     output) — embedding the split expression itself here would
@@ -122,21 +133,84 @@ def _shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
     return _shingles_raw(df, text_col, k).distinct()
 
 
-def _hot_shingles(sh: DataFrame, df_cap: int) -> DataFrame:
-    """Shingles whose document frequency exceeds the cap — the skew
-    list. Tiny by construction (partial aggregation map-side), so it is
-    safe to broadcast."""
+def _hot_keys(df: DataFrame, keys: list[str], cap: int, n: str) -> DataFrame:
+    """(*keys, n) groups with more than ``cap`` rows — the skew list of
+    a pair-generating join. Tiny by construction (partial aggregation
+    map-side), so it is safe to broadcast."""
     return (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > df_cap)
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias(n))
+        .filter(F.col(n) > cap)
     )
 
 
 def shingle_df_dropped(docs: DataFrame, df_cap: int = SHINGLE_DF_CAP) -> DataFrame:
     """Audit view of the cap: (shingle, df) rows that the pair join
     drops. Pipelines log this count — truncation is never silent."""
-    return _hot_shingles(_shingles(docs), df_cap)
+    return _hot_keys(_shingles(docs), ["shingle"], df_cap, "df")
+
+
+def lsh_hot_buckets(banded: DataFrame, bucket_cap: int = BAND_BUCKET_CAP) -> DataFrame:
+    """(band, bucket, n) groups larger than the cap — the audit view of
+    what the band join drops. Tiny by construction; broadcastable."""
+    return _hot_keys(banded, ["band", "bucket"], bucket_cap, "n")
+
+
+def _band_pairs(banded: DataFrame, bucket_cap: int, *extra: Column) -> DataFrame:
+    """(doc_a, doc_b, *extra) — the capped band self-join of a
+    (doc_id, band, bucket, …) table: (band, bucket) groups larger than
+    ``bucket_cap`` are dropped via a broadcast anti-join BEFORE the
+    self-join (one hot bucket of identical boilerplate otherwise emits
+    |bucket|² candidate rows; identical docs are exact-dedup's job;
+    ``lsh_hot_buckets`` audits the drop), then every same-bucket pair is
+    emitted once per shared band, oriented doc_a < doc_b. ``extra`` are
+    pair columns over the ``a``/``b`` sides; callers dedup across
+    bands."""
+    kept = banded.join(
+        F.broadcast(lsh_hot_buckets(banded, bucket_cap).select("band", "bucket")),
+        ["band", "bucket"],
+        "left_anti",
+    )
+    a = kept.alias("a")
+    b = kept.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"), *extra)
+
+
+def _jaccard_at_least(df: DataFrame, keys: list[str], i: Column,
+                      sz_a: str, sz_b: str) -> DataFrame:
+    """(*keys, jaccard) rows of ``df`` whose Jaccard |A∩B| / |A∪B| =
+    i / (sz_a + sz_b - i), rounded to 4 places (the DuckDB twins round
+    the same way), is at least JACCARD_THRESHOLD."""
+    a, b = F.col(sz_a), F.col(sz_b)
+    return df.select(*keys, F.round(i / (a + b - i), 4).alias("jaccard")).filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
+    )
+
+
+def _verify_jaccard(candidates: DataFrame, prof: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) — exact verify of candidate pairs over a
+    (doc_id, hs, sz) profile of per-doc sorted shingle-hash sets: the
+    intersection is ``size(array_intersect(hs_a, hs_b))``, an
+    expression over the two candidates' own hash sets, never a
+    corpus-wide shingle re-join."""
+
+    def side(s: str) -> DataFrame:
+        return prof.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("hs").alias(f"hs_{s}"),
+            F.col("sz").alias(f"sz_{s}"),
+        )
+
+    i = F.size(F.array_intersect("hs_a", "hs_b"))
+    return _jaccard_at_least(
+        candidates.join(side("a"), "doc_a").join(side("b"), "doc_b"),
+        ["doc_a", "doc_b"], i, "sz_a", "sz_b",
+    )
 
 
 def dedup_ngram_jaccard(
@@ -176,8 +250,10 @@ def dedup_ngram_jaccard(
     # aggregation (collect_set ≡ collect_list over pre-distinct rows):
     # one exchange instead of distinct + groupBy — the map-side partial
     # set also dedups before anything ships. r5b: the index never reads
-    # shingle text back, so the key is the map-side int64 hash — see
-    # _shingle_hashes_raw for the shuffle-width and collision math.
+    # shingle text back, so the key is the map-side int64 hash — the
+    # one exchange ships 8-byte longs, not shingle strings; the
+    # collision bound is this query's row of SCALE.md's approximation
+    # register.
     #
     # r6 restructure (guide §2.3/§2.4, OPTIMIZATION_r06.md): the r5
     # shape branched the posting-list aggregation into a sizes branch
@@ -231,58 +307,47 @@ def dedup_ngram_jaccard(
         F.col("a.sz").alias("sz_a"),
         F.col("b.sz").alias("sz_b"),
     ).agg(F.count(F.lit(1)).alias("i"))
-    return (
-        inter.select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("i") / (F.col("sz_a") + F.col("sz_b") - F.col("i")), 4
-            ).alias("jaccard"),
+    return _jaccard_at_least(inter, ["doc_a", "doc_b"], F.col("i"), "sz_a", "sz_b")
+
+
+def _minhash_profile(docs: DataFrame) -> DataFrame:
+    """(doc_id, h0..h15, hs, sz) — ``dedup_minhash_lsh``'s xxhash64
+    family: ONE groupBy(doc_id) over the raw shingle stream computes
+    the 16 seeded minima, the sorted shingle-hash set and its size."""
+    return _shingles_raw(docs).groupBy("doc_id").agg(
+        *[F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"h{s}")
+          for s in range(N_MINHASH)],
+        F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs"),
+    ).withColumn("sz", F.size("hs"))
+
+
+def _minhash_bands(prof: DataFrame, bucket_of) -> DataFrame:
+    """(doc_id, band, bucket) — LSH banding of a (doc_id, h0..h15)
+    minhash profile into N_BANDS bands of N_MINHASH // N_BANDS rows:
+    ONE explode over N_BANDS in-row structs (a per-band union re-runs
+    the profile once per branch). ``bucket_of(*band_cols)`` is the
+    hash family's bucket key."""
+    rpb = N_MINHASH // N_BANDS
+    band_structs = [
+        F.struct(
+            F.lit(band).alias("band"),
+            bucket_of(*[F.col(f"h{band * rpb + r}") for r in range(rpb)]).alias("bucket"),
         )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
-
-
-def minhash_signatures(docs: DataFrame, n_hashes: int = N_MINHASH,
-                       shingles: DataFrame | None = None) -> DataFrame:
-    """(doc_id, h0..h{n-1}) — minhash signature via n seeded xxhash64
-    minima over the shingle set. No UDF: n aggregate expressions."""
-    sh = _shingles(docs) if shingles is None else shingles
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"h{s}")
-        for s in range(n_hashes)
+        for band in range(N_BANDS)
     ]
-    return sh.groupBy("doc_id").agg(*aggs)
+    return prof.select(
+        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
+    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
-def lsh_banded(sig: DataFrame, n_bands: int = N_BANDS,
-               n_hashes: int = N_MINHASH) -> DataFrame:
-    """(doc_id, band, bucket) — LSH banding of a minhash signature."""
-    rows_per_band = n_hashes // n_bands
-    bands = []
-    for band in range(n_bands):
-        cols = [F.col(f"h{band * rows_per_band + r}") for r in range(rows_per_band)]
-        bands.append(
-            sig.select(
-                "doc_id",
-                F.lit(band).alias("band"),
-                F.xxhash64(*cols).alias("bucket"),
-            )
-        )
-    banded = bands[0]
-    for bdf in bands[1:]:
-        banded = banded.unionByName(bdf)
-    return banded
-
-
-def lsh_hot_buckets(banded: DataFrame, bucket_cap: int = BAND_BUCKET_CAP) -> DataFrame:
-    """(band, bucket, n) groups larger than the cap — the audit view of
-    what the band join drops. Tiny by construction; broadcastable."""
-    return (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap)
-    )
+def _minhash_lsh(prof: DataFrame, label: str, bucket_of, bucket_cap: int) -> DataFrame:
+    """(doc_a, doc_b, jaccard) — the MinHash chain over a (doc_id,
+    h0..h15, hs, sz) profile: materialize it once (label ``label``),
+    band it, cap and self-join the band buckets, dedup the candidates
+    across bands and verify them exactly against the profile."""
+    prof = materialize(prof, label)
+    candidates = _band_pairs(_minhash_bands(prof, bucket_of), bucket_cap).distinct()
+    return _verify_jaccard(candidates, prof)
 
 
 def dedup_minhash_lsh(
@@ -321,15 +386,11 @@ def dedup_minhash_lsh(
     bucket of identical boilerplate otherwise emits |bucket|² candidate
     rows (identical docs are exact-dedup's job); ``lsh_hot_buckets``
     audits the drop."""
-    docs = t(spark, sf_dir, "documents")
     # r5 perf fix ×2: (1) aggregate the RAW shingle stream — min() is
     # duplicate-insensitive and collect_set dedups in the aggregation,
     # so the old pre-distinct exchange bought nothing (one shuffle, not
-    # two); (2) band via ONE array-explode pass instead of
-    # lsh_banded's 4-way union (which re-runs the final aggregation
-    # once per band). Signature definition unchanged vs
-    # minhash_signatures() — same xxhash64 seeds over the same distinct
-    # shingle sets, identical (band, bucket) values to lsh_banded.
+    # two); (2) band via ONE array-explode pass instead of a 4-way
+    # union (which re-runs the final aggregation once per band).
     # r6 (guide §2.4, §5 caching): the profile feeds FIVE consumers
     # (banding → hot-bucket audit + anti-join side, the self-join's two
     # candidate sides, and the two verify profile joins); Catalyst
@@ -348,60 +409,8 @@ def dedup_minhash_lsh(
     # SLOWER than this codegen explode + partially-aggregated groupBy,
     # whose exchange ships one complete buffer per doc, not the raw
     # stream; see OPTIMIZATION_r06.md.)
-    sh = _shingles_raw(docs)
-    prof = sh.groupBy("doc_id").agg(
-        *[F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"h{s}")
-          for s in range(N_MINHASH)],
-        F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs"),
-    ).withColumn("sz", F.size("hs"))
-    prof = materialize(prof, "dedup_minhash_lsh:profile")
-    rpb = N_MINHASH // N_BANDS
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.xxhash64(
-                *[F.col(f"h{band * rpb + r}") for r in range(rpb)]
-            ).alias("bucket"),
-        )
-        for band in range(N_BANDS)
-    ]
-    banded = prof.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    kept = banded.join(
-        F.broadcast(lsh_hot_buckets(banded, bucket_cap).select("band", "bucket")),
-        ["band", "bucket"],
-        "left_anti",
-    )
-    a = kept.alias("a")
-    b = kept.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    pa = prof.select(
-        F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")
-    )
-    pb = prof.select(
-        F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b")
-    )
-    i = F.size(F.array_intersect("hs_a", "hs_b"))
-    return (
-        candidates.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(i / (F.col("sz_a") + F.col("sz_b") - i), 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    prof = _minhash_profile(t(spark, sf_dir, "documents"))
+    return _minhash_lsh(prof, "dedup_minhash_lsh:profile", F.xxhash64, bucket_cap)
 
 
 # 64-bit SimHash (VERDICT r2 item 3: the r2 16-bit space held only
@@ -419,11 +428,12 @@ def dedup_minhash_lsh(
 # 2^16 bucket keyspace per band: beyond n ≈ cap·2^16 ≈ 3×10^7 docs the
 # AVERAGE bucket tripped BAND_BUCKET_CAP and recall collapsed to
 # audited-zero. The 32-bit keyspace saturates at cap·2^32 ≈ 2×10^12
-# docs; a corpus past that sets probe_blocks=5 (C(8,5)=56 probes,
-# 40-bit keys, ceiling 5×10^14, guarantee radius 3) via the
-# simhash_banded parameters. Cost: 70 narrow rows/doc instead of 4
-# (the standard Manku space-for-guarantee trade); hot (band, bucket)
-# groups are capped + audited exactly like LSH.
+# docs; a corpus past that sets SIMHASH_PROBE_BLOCKS = 5 below
+# (C(8,5)=56 probes, 40-bit keys, ceiling 5×10^14, guarantee radius
+# 3), the geometry simhash_banded passes to _manku_keys. Cost: 70
+# narrow rows/doc instead of 4 (the standard Manku space-for-guarantee
+# trade); hot (band, bucket) groups are capped + audited exactly like
+# LSH.
 SIMHASH_BITS = 64
 SIMHASH_BLOCKS = 8
 SIMHASH_HAMMING_MAX = 3  # cluster-form verify radius
@@ -437,9 +447,10 @@ SIMHASH_PROBE_BLOCKS = 4  # guarantee radius = BLOCKS - PROBE_BLOCKS = 4
 SIMHASH_PAIRS_PREFILTER = 12
 
 
-def simhash_fingerprints(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """(doc_id, simhash) — 64-bit bitwise-majority fingerprint over
-    token xxhash64 values, expression-only (bits x bit-count sums).
+def _majority_fp(toks: DataFrame, bits: int) -> DataFrame:
+    """(doc_id, simhash) — ``bits``-bit bitwise-majority fingerprint of
+    a (doc_id, h) token-hash stream, expression-only (bits x bit-count
+    sums).
 
     Majority bit b is (2 * ones_b > n_tokens) — bit 1 iff strictly
     more ones than zeros, ties -> 0. The per-bit sums build as ONE
@@ -451,9 +462,6 @@ def simhash_fingerprints(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame
     higher-order aggregate (shiftleft's shift amount can be a column
     in SQL, unlike the Python API). shiftleft(1L, 63) wraps to
     Long.MIN_VALUE on the JVM — exactly the sign-bit mask we want."""
-    toks = tokenize(docs, "text", ["doc_id"]).select(
-        "doc_id", F.xxhash64("term").alias("h")
-    )
     sums_sql = ", ".join(
         f"sum(shiftrightunsigned(h, {b}) & 1L)" for b in range(bits)
     )
@@ -469,14 +477,21 @@ def simhash_fingerprints(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame
     return agg.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_banded(fp: DataFrame, n_blocks: int = SIMHASH_BLOCKS,
-                   probe_blocks: int = SIMHASH_PROBE_BLOCKS) -> DataFrame:
-    """(doc_id, simhash, band, bucket) — Manku block-combination keys:
-    ``band`` indexes one of the C(n_blocks, probe_blocks) combinations,
-    ``bucket`` is that combination's concatenated block values (a
-    ``probe_blocks * block_bits``-bit integer — 32 bits at the
-    defaults; see the module constants for the keyspace ceiling and
-    the probe_blocks=5 escape hatch past 10^12 docs). Column names
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash) — the 64-bit fingerprint over token xxhash64
+    values."""
+    toks = tokenize(docs, "text", ["doc_id"]).select(
+        "doc_id", F.xxhash64("term").alias("h")
+    )
+    return _majority_fp(toks, SIMHASH_BITS)
+
+
+def _manku_keys(fp: DataFrame, bits: int, n_blocks: int, probe: int) -> DataFrame:
+    """(doc_id, simhash, band, bucket) — Manku block-combination keys
+    of a ``bits``-bit fingerprint split into ``n_blocks`` disjoint
+    blocks: ``band`` indexes one of the C(n_blocks, probe) combinations
+    (itertools order), ``bucket`` is that combination's concatenated
+    block values (a ``probe * block_bits``-bit integer). Column names
     kept from the r3 banding so the hot-bucket audit and the pair
     self-join are scheme-agnostic.
 
@@ -487,9 +502,7 @@ def simhash_banded(fp: DataFrame, n_blocks: int = SIMHASH_BLOCKS,
     analysis/codegen per query REGARDLESS of data size (measured at
     n=50 == n=5000); the HOF form plans in milliseconds and evaluates
     the same fold per row."""
-    from itertools import combinations
-
-    block_bits = SIMHASH_BITS // n_blocks
+    block_bits = bits // n_blocks
     mask = F.lit((1 << block_bits) - 1).cast("long")
     radix = F.lit(1 << block_bits).cast("long")
     blocks = F.array(*[
@@ -498,7 +511,7 @@ def simhash_banded(fp: DataFrame, n_blocks: int = SIMHASH_BLOCKS,
     ])
     combos_lit = F.array(*[
         F.array(*[F.lit(b) for b in combo])
-        for combo in combinations(range(n_blocks), probe_blocks)
+        for combo in combinations(range(n_blocks), probe)
     ])
     with_blocks = fp.select(
         "doc_id", "simhash", blocks.alias("blk"), combos_lit.alias("combos")
@@ -522,37 +535,20 @@ def simhash_banded(fp: DataFrame, n_blocks: int = SIMHASH_BLOCKS,
     )
 
 
-def simhash_candidates(fp: DataFrame, *, bucket_cap: int = BAND_BUCKET_CAP,
-                       max_hamming: int | None = None) -> DataFrame:
-    """(doc_a, doc_b, hamming) — banded candidate pairs with their exact
-    hamming distance (bit_count over xor). Hot (band, bucket) groups are
-    dropped from BOTH sides before the self-join (a hot bucket emits
-    |bucket|² candidates; identical-doc floods are exact-dedup's job);
-    ``lsh_hot_buckets`` audits the drop.
+def simhash_banded(fp: DataFrame) -> DataFrame:
+    """(doc_id, simhash, band, bucket) — the 64-bit geometry: 8 blocks
+    of 8 bits, C(8,4) = 70 probe keys of 32 bits each (see the module
+    constants for the keyspace ceiling)."""
+    return _manku_keys(fp, SIMHASH_BITS, SIMHASH_BLOCKS, SIMHASH_PROBE_BLOCKS)
 
-    The banded fingerprint table is materialized once: it feeds both
-    the hot-bucket audit and the self-join, and recomputing it would
-    re-run the full token scan + 64-bit majority aggregation twice. It
-    is 4 narrow rows per doc — at corpus scale this is the fingerprint
-    table a production pipeline commits (TableIO) between the
-    fingerprint and pairing stages; in-plan materialization is the
-    single-job equivalent."""
-    banded = materialize(simhash_banded(fp), "simhash_candidates:banded")
-    kept = banded.join(
-        F.broadcast(lsh_hot_buckets(banded, bucket_cap).select("band", "bucket")),
-        ["band", "bucket"],
-        "left_anti",
-    )
-    a = kept.alias("a")
-    b = kept.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
+
+def _hamming_pairs(banded: DataFrame, bucket_cap: int,
+                   max_hamming: int | None) -> DataFrame:
+    """(doc_a, doc_b, hamming) — capped band pairs of a
+    ``_manku_keys`` table with their exact hamming distance (bit_count
+    over xor), deduped across bands."""
+    pairs = _band_pairs(
+        banded, bucket_cap,
         F.bit_count(
             F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
         ).cast("int").alias("hamming"),
@@ -562,8 +558,25 @@ def simhash_candidates(fp: DataFrame, *, bucket_cap: int = BAND_BUCKET_CAP,
         # the cross-band dedup is semantically identical — and shrinks
         # the distinct's input from every band collision to just the
         # verified pairs (232k → ~500 on the sf0.1 fixture)
-        joined = joined.filter(F.col("hamming") <= max_hamming)
-    return joined.distinct()
+        pairs = pairs.filter(F.col("hamming") <= max_hamming)
+    return pairs.distinct()
+
+
+def simhash_candidates(fp: DataFrame, *, bucket_cap: int = BAND_BUCKET_CAP,
+                       max_hamming: int | None = None) -> DataFrame:
+    """(doc_a, doc_b, hamming) — banded candidate pairs with their exact
+    hamming distance. Hot (band, bucket) groups are dropped from BOTH
+    sides before the self-join (``_band_pairs``).
+
+    The banded fingerprint table is materialized once: it feeds both
+    the hot-bucket audit and the self-join, and recomputing it would
+    re-run the full token scan + 64-bit majority aggregation twice. It
+    is 70 narrow rows per doc — at corpus scale this is the fingerprint
+    table a production pipeline commits (TableIO) between the
+    fingerprint and pairing stages; in-plan materialization is the
+    single-job equivalent."""
+    banded = materialize(simhash_banded(fp), "simhash_candidates:banded")
+    return _hamming_pairs(banded, bucket_cap, max_hamming)
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -575,27 +588,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming-verify, union) rather than the r2 exact-collision grouping,
     which at 64 bits would only ever catch byte-identical token
     streams."""
-    docs = t(spark, sf_dir, "documents")
-    fp = simhash_fingerprints(docs)
+    fp = simhash_fingerprints(t(spark, sf_dir, "documents"))
     pairs = simhash_candidates(fp, max_hamming=SIMHASH_HAMMING_MAX)
-    labels = connected_components(pairs.select("doc_a", "doc_b"))
-    return labels.groupBy(F.col("label").alias("keep_id")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.collect_list("doc_id")), lambda x: x.cast("string")
-            ),
-        ).alias("members"),
-    )
+    return _clusters(connected_components(pairs.select("doc_a", "doc_b")))
 
 
 def dedup_simhash_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    bucket_cap: int = BAND_BUCKET_CAP,
-    jaccard_threshold: float = JACCARD_THRESHOLD,
+    spark: SparkSession, sf_dir: str, *, bucket_cap: int = BAND_BUCKET_CAP
 ) -> DataFrame:
     """✂ SimHash near-dup PAIRS: 64-bit block-probed candidates pass a
     loose exact-hamming pre-filter (<= SIMHASH_PAIRS_PREFILTER — bit
@@ -633,24 +632,7 @@ def dedup_simhash_pairs(
         ), "dedup_simhash_pairs:profile")
 
     built = overlap({"candidates": _mk_cand, "profile": _mk_prof})
-    cand, prof = built["candidates"], built["profile"]
-    pa = prof.select(
-        F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")
-    )
-    pb = prof.select(
-        F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b")
-    )
-    i = F.size(F.array_intersect("hs_a", "hs_b"))
-    return (
-        cand.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(i / (F.col("sz_a") + F.col("sz_b") - i), 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
+    return _verify_jaccard(built["candidates"], built["profile"])
 
 
 def turn_dedup_within_conv(spans: DataFrame, threshold: float = 0.9) -> DataFrame:
@@ -839,15 +821,10 @@ def connected_components(
     return labels
 
 
-def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup cluster resolution: near-dup pairs (3-gram Jaccard >= 0.8)
-    → connected components → one keeper per cluster (min doc_id) with
-    the sorted member list. The iterative Spark label propagation is
-    oracle-checked against a DuckDB recursive-CTE transitive closure —
-    the pipeline step that turns pairwise near-dup evidence into an
-    actionable drop list."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
+def _clusters(labels: DataFrame) -> DataFrame:
+    """(keep_id, n_docs, members) — one row per CC cluster of (doc_id,
+    label) labels: keep_id is the cluster min, members the sorted ids
+    joined by ','."""
     return labels.groupBy(F.col("label").alias("keep_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.concat_ws(
@@ -859,19 +836,34 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ngram_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, label) — connected components of the 3-gram Jaccard
+    near-dup pairs (``dedup_ngram_jaccard``)."""
+    return connected_components(
+        dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    )
+
+
+def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup cluster resolution: near-dup pairs (3-gram Jaccard >= 0.8)
+    → connected components → one keeper per cluster (min doc_id) with
+    the sorted member list. The iterative Spark label propagation is
+    oracle-checked against a DuckDB recursive-CTE transitive closure —
+    the pipeline step that turns pairwise near-dup evidence into an
+    actionable drop list."""
+    return _clusters(_ngram_labels(spark, sf_dir))
+
+
 INCR_CLONE_OFFSET = 1_000_000
 INCR_EXISTING_PREFIX_LT = "c"  # md5 first hex < 'c' → ~3/4 existing
 
 
-def dedup_incremental(
-    spark: SparkSession, sf_dir: str, *,
-    jaccard_threshold: float = JACCARD_THRESHOLD,
-) -> DataFrame:
+def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL ingest dedup (★) — the production shape: a NEW
     batch is checked against the EXISTING corpus index only, never
     against itself (new-vs-new is the next batch's nightly CC job).
     Per new doc: 'exact' (content fingerprint hit; matched_id = min
-    matching existing doc), else 'near' (3-gram Jaccard >= threshold
+    matching existing doc), else 'near' (3-gram Jaccard >= JACCARD_THRESHOLD
     vs an existing doc via the inverted shingle index; best match by
     jaccard desc, id asc), else 'unique'.
 
@@ -946,10 +938,7 @@ def dedup_incremental(
     sz_n = shn.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz_n"))
     sz_e = she.groupBy("old_id").agg(F.count(F.lit(1)).alias("sz_e"))
     hot = F.broadcast(
-        she.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > SHINGLE_DF_CAP)
-        .select("shingle")
+        _hot_keys(she, ["shingle"], SHINGLE_DF_CAP, "df").select("shingle")
     )
     inter = (
         shn.join(hot, "shingle", "left_anti")
@@ -957,15 +946,9 @@ def dedup_incremental(
         .groupBy("doc_id", "old_id")
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    jac = (
-        inter.join(sz_n, "doc_id").join(sz_e, "old_id")
-        .select(
-            "doc_id", "old_id",
-            F.round(
-                F.col("i") / (F.col("sz_n") + F.col("sz_e") - F.col("i")), 4
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+    jac = _jaccard_at_least(
+        inter.join(sz_n, "doc_id").join(sz_e, "old_id"),
+        ["doc_id", "old_id"], F.col("i"), "sz_n", "sz_e",
     )
     w = W.partitionBy("doc_id").orderBy(
         F.col("jaccard").desc(), F.col("old_id").asc()
@@ -1003,8 +986,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. One broadcast anti-join against the (tiny) drop list; at
     10^12 rows the drop list is a committed table and this is a
     map-side bloom/anti join on the scan."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
+    labels = _ngram_labels(spark, sf_dir)
     drops = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
     docs = t(spark, sf_dir, "documents")
     return docs.join(F.broadcast(drops), "doc_id", "left_anti").select(
@@ -1029,8 +1011,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     output (here recomputed in-query to stay self-contained, exactly
     like ``dedup_survivors``); assignment is one doc-keyed left join
     + a cluster-keyed window for the size audit. No driver traffic."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs)
+    labels = _ngram_labels(spark, sf_dir)
     docs = t(spark, sf_dir, "documents").select("doc_id")
     lab = docs.join(F.broadcast(labels), "doc_id", "left").select(
         "doc_id", F.coalesce("label", "doc_id").alias("cluster")
@@ -1127,9 +1108,7 @@ def _md5_hash60(col, seed) -> "F.Column":
     return F.conv(F.substring(F.md5(tagged), 1, 15), 16, 10).cast("long")
 
 
-def dedup_minhash_portable(
-    spark: SparkSession, sf_dir: str, *, bucket_cap: int = BAND_BUCKET_CAP
-) -> DataFrame:
+def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH with ENGINE-PORTABLE hashing (★) — the same
     pipeline as ``dedup_minhash_lsh`` (one-pass profile agg, 4x4
     banding, hot-bucket cap, exact set-intersection verify) but every
@@ -1159,7 +1138,6 @@ def dedup_minhash_portable(
         F.conv(F.substring(F.md5("shingle"), 15, 14), 16, 10)
         .cast("long").alias("hb"),
     )
-    rows_per_band = N_MINHASH // N_BANDS
     m56 = F.lit(1 << 56).cast("long")
     prof = sh.groupBy("doc_id").agg(
         *[F.min(F.pmod(F.col("ha") + F.lit(s) * F.col("hb"), m56))
@@ -1174,57 +1152,10 @@ def dedup_minhash_portable(
     # once per invocation (the committed-signature-table analog) and
     # banding is ONE explode over 4 in-row structs instead of a 4-way
     # union; (band, bucket) values are unchanged.
-    prof = materialize(prof, "dedup_minhash_portable:profile")
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.concat_ws(
-                "_",
-                *[F.col(f"h{band * rows_per_band + r}").cast("string")
-                  for r in range(rows_per_band)],
-            ).alias("bucket"),
-        )
-        for band in range(N_BANDS)
-    ]
-    banded = prof.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    hot = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap)
-        .select("band", "bucket")
-    )
-    kept = banded.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    a, b = kept.alias("a"), kept.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    pa = prof.select(F.col("doc_id").alias("doc_a"),
-                     F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a"))
-    pb = prof.select(F.col("doc_id").alias("doc_b"),
-                     F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b"))
-    i = F.size(F.array_intersect("hs_a", "hs_b"))
-    return (
-        candidates.join(pa, "doc_a")
-        .join(pb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(i / (F.col("sz_a") + F.col("sz_b") - i), 4)
-            .alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    return _minhash_lsh(
+        prof, "dedup_minhash_portable:profile",
+        lambda *h: F.concat_ws("_", *[c.cast("string") for c in h]),
+        BAND_BUCKET_CAP,
     )
 
 
@@ -1234,14 +1165,11 @@ def dedup_minhash_portable(
 # pigeonhole-exact for hamming <= 3
 PSIM_BITS = 60
 PSIM_BLOCKS = 6
-PSIM_BLOCK_BITS = PSIM_BITS // PSIM_BLOCKS
 PSIM_PROBE = 3
 PSIM_HAMMING_MAX = 3
 
 
-def dedup_simhash_portable(
-    spark: SparkSession, sf_dir: str, *, bucket_cap: int = BAND_BUCKET_CAP
-) -> DataFrame:
+def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup PAIRS with ENGINE-PORTABLE hashing (★) — the
     md5-60bit sibling of ``dedup_minhash_portable``: fingerprint
     (bitwise majority over ALL token occurrences, ties -> 0), Manku
@@ -1252,75 +1180,19 @@ def dedup_simhash_portable(
     xxhash64 form (``dedup_simhash``/``dedup_simhash_pairs``) stays
     the production fast path; 60-vs-64 bits costs ~6% fingerprint
     resolution and nothing structural."""
-    from itertools import combinations
-
     docs = t(spark, sf_dir, "documents")
     toks = tokenize(docs, "text", ["doc_id"]).select(
         "doc_id", _md5_hash60(F.col("term"), "t").alias("h")
     )
-    sums_sql = ", ".join(
-        f"sum(shiftrightunsigned(h, {b}) & 1L)" for b in range(PSIM_BITS)
-    )
-    agg = toks.groupBy("doc_id").agg(
-        F.expr(f"array({sums_sql})").alias("bs"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    fp_expr = F.expr(
-        f"aggregate(zip_with(bs, sequence(0, {PSIM_BITS - 1}), "
-        "(s, b) -> if(2 * s > n, shiftleft(1L, b), 0L)), "
-        "0L, (acc, x) -> acc | x)"
-    )
     # r6 (guide §2.4, §5): the 60-bit majority aggregation materializes
     # once per invocation — the r5 form re-ran the token scan + 60-sum
     # aggregate once per probe-combination UNION branch (20×) inside
-    # the banded checkpoint job (4.6s median at sf0.1). Banding is now
-    # ONE posexplode over the 20 fold keys (identical band order —
-    # itertools.combinations enumeration — and identical
-    # base-2^block_bits key arithmetic).
-    fp = materialize(agg.select("doc_id", fp_expr.alias("fp")),
+    # the banded checkpoint job (4.6s median at sf0.1). Banding is ONE
+    # posexplode over the 20 fold keys (itertools.combinations band
+    # order and base-2^block_bits key arithmetic, as in the DuckDB twin).
+    fp = materialize(_majority_fp(toks, PSIM_BITS),
                      "dedup_simhash_portable:fingerprints")
-
-    mask = F.lit((1 << PSIM_BLOCK_BITS) - 1).cast("long")
-    radix = 1 << PSIM_BLOCK_BITS
-    blocks = F.array(*[
-        F.shiftrightunsigned("fp", i * PSIM_BLOCK_BITS).bitwiseAND(mask)
-        for i in range(PSIM_BLOCKS)
-    ])
-    combos = list(combinations(range(PSIM_BLOCKS), PSIM_PROBE))
-    keyed = fp.select("doc_id", "fp", blocks.alias("blk"))
-    keys = []
-    for combo in combos:
-        key = F.lit(0).cast("long")
-        for b in combo:
-            key = key * radix + F.element_at(F.col("blk"), b + 1)
-        keys.append(key)
-    banded = keyed.select(
-        "doc_id", "fp", F.posexplode(F.array(*keys)).alias("band", "bucket")
-    ).select(
-        "doc_id", "fp", F.col("band").cast("int").alias("band"), "bucket"
-    )
-    hot = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap)
-        .select("band", "bucket")
-    )
-    kept = banded.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    a, b = kept.alias("a"), kept.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= PSIM_HAMMING_MAX)
-        .distinct()
+    return _hamming_pairs(
+        _manku_keys(fp, PSIM_BITS, PSIM_BLOCKS, PSIM_PROBE),
+        BAND_BUCKET_CAP, PSIM_HAMMING_MAX,
     )

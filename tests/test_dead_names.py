@@ -1,19 +1,19 @@
 """No package module defines a name nobody uses. A stdlib ``ast`` scan
 (the sibling of test_dead_imports.py): every module-level function,
-class or constant of the package must appear as a word somewhere other
-than its own definition line — in the package, ``tests/``,
-``perfbench/`` or the root scripts. Dunders are exempt."""
+class or constant of the package must be used in code somewhere — in
+the package, ``tests/``, ``perfbench/`` or the root scripts. A use is a
+``Name`` load, an ``Attribute`` attribute, an imported name or a string
+in ``__all__``; a mention in a comment, docstring or other string is
+not. Dunders are exempt."""
 
 from __future__ import annotations
 
 import ast
-import re
 from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "amazon_textract_enhancer_spark"
-_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def module_level_names(source: str) -> list[tuple[int, str]]:
@@ -30,22 +30,39 @@ def module_level_names(source: str) -> list[tuple[int, str]]:
             if not (n.startswith("__") and n.endswith("__"))]
 
 
+def code_uses(source: str) -> Counter:
+    """Names the source uses in code. F-string expressions parse to
+    ordinary nodes, so a name read only inside an ``f"…"`` counts."""
+    uses = Counter()
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            uses[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            uses[node.attr] += 1
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for alias in node.names:
+                uses.update(alias.name.split("."))
+        elif isinstance(node, ast.Assign) and any(
+            isinstance(tg, ast.Name) and tg.id == "__all__" for tg in node.targets
+        ):
+            uses.update(e.value for e in ast.walk(node.value)
+                        if isinstance(e, ast.Constant) and isinstance(e.value, str))
+    return uses
+
+
 def dead_names(package: dict[str, str], others: list[str]) -> list[str]:
     """``package`` maps a module path to its source; ``others`` are the
-    sources that may use the package. A name is dead when its word
-    count over everything, minus the count on its definition line, is
-    zero."""
-    words = Counter()
+    sources that may use the package. A name is dead when no source
+    uses it in code."""
+    uses = Counter()
     for src in list(package.values()) + others:
-        words.update(_WORD.findall(src))
-    out = []
-    for path, src in package.items():
-        lines = src.splitlines()
-        for ln, name in module_level_names(src):
-            own = _WORD.findall(lines[ln - 1]).count(name)
-            if words[name] - own == 0:
-                out.append(f"{path}:{ln} {name}")
-    return sorted(out)
+        uses.update(code_uses(src))
+    return sorted(
+        f"{path}:{ln} {name}"
+        for path, src in package.items()
+        for ln, name in module_level_names(src)
+        if uses[name] == 0
+    )
 
 
 def test_scan_flags_a_dead_name():
@@ -55,6 +72,25 @@ def test_scan_flags_a_dead_name():
     }
     assert dead_names(pkg, []) == ["a.py:2 Y", "a.py:5 f", "a.py:9 _C"]
     assert dead_names(pkg, ["from a import f, Y, _C\n"]) == []
+
+
+def test_scan_counts_code_not_words():
+    pkg = {
+        "a.py": (
+            "def _g():\n"
+            '    """Unlike _h, this one is used."""\n'
+            "\n\n"
+            "def _h():\n"
+            "    pass\n"
+            "\n\n"
+            "S = 'q'\n"
+            "T = 3\n"
+            "# _h and T were here\n"
+            "print(_g(), f\"{S!r}\", 'T')\n"
+        ),
+    }
+    assert dead_names(pkg, []) == ["a.py:10 T", "a.py:5 _h"]
+    assert dead_names(pkg, ["import a\nprint(a._h, a.T)\n"]) == []
 
 
 def test_no_dead_names_in_package():

@@ -11,13 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from amazon_textract_enhancer_spark.operators.dedup import (
-    _shingles,
+    _minhash_bands,
+    _minhash_profile,
     dedup_exact,
     dedup_minhash_lsh,
     dedup_ngram_jaccard,
-    lsh_banded,
     lsh_hot_buckets,
-    minhash_signatures,
     shingle_df_dropped,
 )
 
@@ -76,7 +75,8 @@ def test_minhash_lsh_bucket_cap_bounds_blowup(spark, skew_dir):
 
 def test_lsh_hot_buckets_audit(spark, skew_dir):
     docs = spark.read.parquet(f"{skew_dir}/documents.parquet")
-    banded = lsh_banded(minhash_signatures(docs, shingles=_shingles(docs)))
+    # the banding dedup_minhash_lsh runs, over its own profile
+    banded = _minhash_bands(_minhash_profile(docs), F.xxhash64)
     hot = lsh_hot_buckets(banded, bucket_cap=50).collect()
     # identical docs share identical signatures → one hot bucket per band
     assert len(hot) == 4
