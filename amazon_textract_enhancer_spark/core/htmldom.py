@@ -571,6 +571,13 @@ def parse_html_nodes(text: str) -> list[dict]:
         # degrade exactly like the stdlib path: rerun below, which
         # try/excepts itself — the caller records a skip counter (D6)
         pass
+    return parse_html_nodes_stdlib(text)
+
+
+def parse_html_nodes_stdlib(text: str) -> list[dict]:
+    """The stdlib-only parse — the behavioral reference _fast_nodes is
+    pinned against (tests/test_fast_html.py) and the fallback of
+    ``parse_html_nodes``."""
     p = _NodeCollector()
     try:
         p.feed(text)
@@ -578,18 +585,6 @@ def parse_html_nodes(text: str) -> list[dict]:
     except Exception:
         # html.parser is lax; only pathological inputs raise. Return what
         # we collected — the caller records a skip counter (D6).
-        pass
-    return p.nodes
-
-
-def parse_html_nodes_stdlib(text: str) -> list[dict]:
-    """The stdlib-only parse — the behavioral reference _fast_nodes is
-    pinned against (tests/test_fast_html.py)."""
-    p = _NodeCollector()
-    try:
-        p.feed(text)
-        p.close()
-    except Exception:
         pass
     return p.nodes
 

@@ -414,16 +414,6 @@ def encode_jpeg_color(width: int, height: int, y_plane: bytes,
             + entropy + b"\xff\xd9")
 
 
-def decode_jpeg_gray(data: bytes) -> tuple[int, int, bytes]:
-    """→ (width, height, row-major 8-bit pixels). Tables and dimensions
-    come from the stream, not from assumptions. ValueError outside the
-    baseline-grayscale subset, including truncation."""
-    width, height, channels, px = decode_jpeg(data)
-    if channels != 1:
-        raise ValueError("JPEG: expected grayscale, got 3-component color")
-    return width, height, px
-
-
 def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
     """General baseline decode → (width, height, channels, pixels):
     channels=1 row-major gray, or channels=3 interleaved RGB after

@@ -8,8 +8,9 @@ tests/test_blocks_relational.py — the dataflow decomposition is:
 
 - B1 block-map lookup  → self-equi-join on (conv_id, turn_idx, id)
 - B3 CHILD traversal   → posexplode(child_ids) keeps Relationship order
-- B4 text assembly     → order-sensitive agg: array_sort(collect_list(
-                          struct(pos, word))) → transform → concat_ws
+- B4 text assembly     → order-sensitive agg ``relational.ordered_concat``:
+                          array_sort(collect_list(struct(pos, word)))
+                          → transform → concat_ws
 - B5 page/doc text     → two-level ordered agg (LINE-in-PAGE, PAGE-in-doc)
 - B6 grid + B9 CSV     → dense grid via sequence()×sequence() explode,
                           left join placed cells, '' fill, RFC-4180
@@ -24,8 +25,9 @@ JSON ingested through sources/blockjson.py CAN (VERDICT r1 item 6) —
 tests/test_blocks_relational.py proves the overlay equal to the fused
 core on a merged-cell response ingested via parse_response_chunks.
 
-Every aggregation here carries its sort key inside the struct — bare
-collect_list order is undefined post-shuffle (SURVEY.md §7.3 item 1).
+Every ordered concat here is ``relational.ordered_concat``, which carries
+the sort key inside the struct — bare collect_list order is undefined
+post-shuffle (SURVEY.md §7.3 item 1).
 """
 
 from __future__ import annotations
@@ -33,17 +35,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .relational import ordered_concat
+
 _KEY = ["conv_id", "turn_idx"]
-
-
-def _ordered_concat(pos: str, val: str, sep: str) -> Column:
-    return F.concat_ws(
-        sep,
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(pos, val))),
-            lambda x: x[val],
-        ),
-    )
 
 
 def container_texts(blocks: DataFrame, container_types: list[str]) -> DataFrame:
@@ -74,7 +68,7 @@ def container_texts(blocks: DataFrame, container_types: list[str]) -> DataFrame:
     return (
         joined.filter(F.col("word").isNotNull())
         .groupBy(*_KEY, "parent_id")
-        .agg(_ordered_concat("pos", "word", " ").alias("text"))
+        .agg(ordered_concat(["pos"], "word", " ").alias("text"))
         .withColumnRenamed("parent_id", "id")
     )
 
@@ -92,12 +86,12 @@ def document_text_relational(blocks: DataFrame) -> DataFrame:
     page_texts = (
         pages.join(lines, on=_KEY + ["child_id"], how="inner")
         .groupBy(*_KEY, "page_no")
-        .agg(_ordered_concat("pos", "line_text", "\n").alias("page_text"))
+        .agg(ordered_concat(["pos"], "line_text", "\n").alias("page_text"))
     )
     return (
         page_texts.filter(F.col("page_text") != "")
         .groupBy(*_KEY)
-        .agg(_ordered_concat("page_no", "page_text", "\n").alias("extracted_text"))
+        .agg(ordered_concat(["page_no"], "page_text", "\n").alias("extracted_text"))
     )
 
 
@@ -137,16 +131,9 @@ def _merged_overlay(blocks: DataFrame, cells: DataFrame,
     )
     magg = const.groupBy(*_KEY, "table_id", "merged_id").agg(
         F.min(F.struct("r", "c", "cell_id")).alias("anchor"),
-        F.concat_ws(
-            " ",
-            F.filter(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("mpos", "ctext"))),
-                    lambda x: x["ctext"],
-                ),
-                lambda s: s != "",
-            ),
-        ).alias("fallback_text"),
+        ordered_concat(["mpos"], F.nullif("ctext", F.lit("")), " ").alias(
+            "fallback_text"
+        ),
         F.collect_list("cell_id").alias("const_ids"),
     )
     own = container_texts(blocks, ["MERGED_CELL"]).withColumnRenamed(
@@ -219,10 +206,10 @@ def tables_relational(blocks: DataFrame) -> DataFrame:
         how="left",
     ).withColumn("cell_out", _csv_quote(F.coalesce("text", F.lit(""))))
     rows = filled.groupBy(*_KEY, "table_id", "page", "n_rows", "n_cols", "r").agg(
-        _ordered_concat("c", "cell_out", ",").alias("row_csv")
+        ordered_concat(["c"], "cell_out", ",").alias("row_csv")
     )
     return rows.groupBy(*_KEY, "table_id", "page", "n_rows", "n_cols").agg(
-        _ordered_concat("r", "row_csv", "\n").alias("csv")
+        ordered_concat(["r"], "row_csv", "\n").alias("csv")
     )
 
 

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _shingles
 from .io_util import materialize, overlap, t, t_spread
-from .serving import kgrams, split_terms, terms
+from .serving import kgram_array, kgrams, split_terms, terms
 
 # Gopher-style thresholds (arXiv 2112.11446 §A1.1 uses 0.18 for the
 # top-2-gram character fraction; the duplicate-5-gram family uses
@@ -73,15 +73,7 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size("L") >= 3)
 
     nt = F.size("L")
-    tris = F.transform(
-        F.sequence(F.lit(1), nt - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(F.col("L"), i),
-            F.element_at(F.col("L"), i + 1),
-            F.element_at(F.col("L"), i + 2),
-        ),
-    )
+    tris = kgram_array(3, lambda parts: F.concat_ws(" ", *parts))
     arr_metrics = base.select(
         "doc_id",
         "nch",
@@ -564,24 +556,12 @@ def _hashed_bigram_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("doc_id", "lang", terms("text").alias("L")).filter(
         F.size("L") >= 2
     )
-    arr = F.col("L")
     return base.select(
         "doc_id",
         "lang",
         F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size(arr) - 2),
-                lambda i: F.substring(
-                    F.md5(
-                        F.concat(
-                            F.element_at(arr, i + 1),
-                            F.lit(" "),
-                            F.element_at(arr, i + 2),
-                        )
-                    ),
-                    1,
-                    2,
-                ),
+            kgram_array(
+                2, lambda p: F.substring(F.md5(F.concat(p[0], F.lit(" "), p[1])), 1, 2)
             )
         ).alias("bucket"),
     )
@@ -928,7 +908,7 @@ def decontaminate_bloom(
         docs.filter(~is_eval)
         .select("doc_id", L.alias("L"))
         .filter(F.size("L") >= k)
-        .select("doc_id", F.size(_shingle_hash_array("L", k)).alias("n_ngrams"))
+        .select("doc_id", F.size(_shingle_hash_array(k)).alias("n_ngrams"))
     )
     corpus_ngrams = _shingles_raw(docs.filter(~is_eval), k=k)
     # the eval-side distinct set feeds both the Bloom build and the

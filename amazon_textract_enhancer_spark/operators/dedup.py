@@ -63,7 +63,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io_util import materialize, overlap, t
-from .serving import kgrams, split_terms, terms, tokenize
+from .relational import ordered_concat
+from .serving import kgram_array, kgrams, split_terms, terms, tokenize
 
 N_MINHASH = 16  # signature length
 N_BANDS = 4  # 4 bands x 4 rows: P(candidate) = 1-(1-j^4)^4
@@ -101,29 +102,18 @@ def _shingles_raw(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFram
     return rows.select("doc_id", F.concat_ws(" ", *parts).alias("shingle"))
 
 
-def _shingle_hash_array(L_col: str = "L", k: int = 3):
-    """In-row expression: the DISTINCT int64 shingle-hash array of one
-    document (r6, guide §2.3/§2.4). A document is ONE source row, so
-    its shingle set — and therefore its set size and any per-document
-    aggregate of it — needs no shuffle at all: ``array_distinct`` over
-    a ``transform`` replaces the explode → groupBy(doc_id) round-trip.
-    Hash values are byte-identical to the ``kgrams`` posting-list keys
-    of ``dedup_ngram_jaccard`` (same xxhash64 over the same k token
-    columns), so consumers see the same sets.
-
-    ``L_col`` must be a BOUND column holding the token array (split
-    output) — embedding the split expression itself here would
-    re-evaluate it per array element inside the interpreted lambda
-    (measured: 2.8s → 19s, O(tokens²) per row). Guard: rows with fewer
-    than k tokens must be filtered by the caller (``sequence(1, 0)``
-    would count DOWN)."""
-    L = F.col(L_col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(L) - (k - 1)),
-            lambda i: F.xxhash64(*[F.element_at(L, i + j) for j in range(k)]),
-        )
-    )
+def _shingle_hash_array(k: int = 3):
+    """In-row expression: the DISTINCT int64 shingle-hash array of the
+    bound token array ``L`` of one document (r6, guide §2.3/§2.4). A
+    document is ONE source row, so its shingle set — and therefore its
+    set size and any per-document aggregate of it — needs no shuffle
+    at all: ``array_distinct`` over ``kgram_array`` replaces the
+    explode → groupBy(doc_id) round-trip. Hash values are
+    byte-identical to the ``kgrams`` posting-list keys of
+    ``dedup_ngram_jaccard`` (same xxhash64 over the same k token
+    columns), so consumers see the same sets. Contract (bound ``L``,
+    caller filters rows with fewer than k tokens) is ``kgram_array``'s."""
+    return F.array_distinct(kgram_array(k, lambda parts: F.xxhash64(*parts)))
 
 
 def _shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
@@ -283,7 +273,7 @@ def dedup_ngram_jaccard(
     sized = (
         docs.select("doc_id", split_terms("text").alias("L"))
         .filter(F.size("L") >= 3)
-        .select("doc_id", F.size(_shingle_hash_array("L")).alias("sz"), "L")
+        .select("doc_id", F.size(_shingle_hash_array()).alias("sz"), "L")
     )
     rows, parts = kgrams(sized, 3, ["doc_id", "sz"])
     posting = (
@@ -310,15 +300,24 @@ def dedup_ngram_jaccard(
     return _jaccard_at_least(inter, ["doc_a", "doc_b"], F.col("i"), "sz_a", "sz_b")
 
 
+def _shingle_profile(docs: DataFrame, *aggs: Column) -> DataFrame:
+    """(doc_id, *aggs, hs, sz) — the verify profile of ``_verify_jaccard``:
+    ONE groupBy(doc_id) over the raw shingle stream (collect_set dedups
+    in the aggregation, no ``distinct`` exchange) computes ``aggs``, the
+    sorted shingle-hash set and its size."""
+    return _shingles_raw(docs).groupBy("doc_id").agg(
+        *aggs, F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs"),
+    ).withColumn("sz", F.size("hs"))
+
+
 def _minhash_profile(docs: DataFrame) -> DataFrame:
     """(doc_id, h0..h15, hs, sz) — ``dedup_minhash_lsh``'s xxhash64
-    family: ONE groupBy(doc_id) over the raw shingle stream computes
-    the 16 seeded minima, the sorted shingle-hash set and its size."""
-    return _shingles_raw(docs).groupBy("doc_id").agg(
-        *[F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"h{s}")
-          for s in range(N_MINHASH)],
-        F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs"),
-    ).withColumn("sz", F.size("hs"))
+    family: the 16 seeded minima ride in the shingle profile's one
+    groupBy."""
+    return _shingle_profile(docs, *[
+        F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"h{s}")
+        for s in range(N_MINHASH)
+    ])
 
 
 def _minhash_bands(prof: DataFrame, bucket_of) -> DataFrame:
@@ -602,17 +601,17 @@ def dedup_simhash_pairs(
     item 3: skipping it made every raw collision pay a full-shingle
     array_intersect, 3x the rest of the bench combined), then EXACT
     3-gram shingle Jaccard verification via array_intersect over
-    per-doc shingle-hash sets (one groupBy — same profile shape as
-    dedup_minhash_lsh), so every emitted pair is a true near-dup, not a
-    fingerprint coincidence. Differs from dedup_simhash in the verify
-    metric: this is the content-verified pair list (feeds the same CC
-    resolution as the other pair miners); the cluster form verifies in
-    hamming space only."""
+    per-doc shingle-hash sets (``_shingle_profile``, the profile
+    dedup_minhash_lsh extends with its minima), so every emitted pair
+    is a true near-dup, not a fingerprint coincidence. Differs from
+    dedup_simhash in the verify metric: this is the content-verified
+    pair list (feeds the same CC resolution as the other pair miners);
+    the cluster form verifies in hamming space only."""
     docs = t(spark, sf_dir, "documents")
 
     # r6 (guide §2.4, §2.6, §5): the verify profile feeds both sides —
-    # without materialization the shingle scan + distinct + aggregation
-    # ran twice (column pruning blocks ReusedExchange, as in the
+    # without materialization the shingle scan + aggregation ran
+    # twice (column pruning blocks ReusedExchange, as in the
     # minhash ops) — AND the candidate chain's banded checkpoint is
     # independent of it, so the two materialization jobs overlap
     # instead of running back-to-back.
@@ -625,11 +624,7 @@ def dedup_simhash_pairs(
         ).select("doc_a", "doc_b")
 
     def _mk_prof():
-        sh = _shingles(docs)
-        return materialize(sh.groupBy("doc_id").agg(
-            F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs"),
-            F.count(F.lit(1)).alias("sz"),
-        ), "dedup_simhash_pairs:profile")
+        return materialize(_shingle_profile(docs), "dedup_simhash_pairs:profile")
 
     built = overlap({"candidates": _mk_cand, "profile": _mk_prof})
     return _verify_jaccard(built["candidates"], built["profile"])
@@ -827,6 +822,7 @@ def _clusters(labels: DataFrame) -> DataFrame:
     joined by ','."""
     return labels.groupBy(F.col("label").alias("keep_id")).agg(
         F.count(F.lit(1)).alias("n_docs"),
+        # not ordered_concat: the ids themselves are the sort key
         F.concat_ws(
             ",",
             F.transform(
@@ -1050,7 +1046,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     index are ONE doc_id-keyed window over the exploded token stream
     (docs are short here; for book-length docs the cumsum runs inside
     a grouped-map per doc instead — same semantics, bounded memory);
-    chunk assembly is a struct-sorted agg per (doc, chunk); the census
+    chunk assembly is ``ordered_concat`` per (doc, chunk); the census
     is one fingerprint-keyed agg — the repeated-spans shape, no pair
     join anywhere."""
     from pyspark.sql import Window
@@ -1071,20 +1067,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "chunk_idx", F.sum("is_boundary").over(wcum).cast("int")
     )
     chunks = chunked.groupBy("doc_id", "chunk_idx").agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(F.col("pos").alias("i"),
-                                     F.col("w").alias("s"))
-                        )
-                    ),
-                    lambda st: st.s,
-                ),
-                " ",
-            )
-        ).alias("chunk_fp"),
+        F.md5(ordered_concat(["pos"], "w", " ")).alias("chunk_fp"),
         F.count(F.lit(1)).cast("int").alias("n_tokens"),
     )
     return (

@@ -30,6 +30,7 @@ from ..fixture_cache import WHALE_CAP, cache_dir, ensure_fixture_cache, table_pa
 from ..sources.tableio import TableIO
 from ..stages import extract_turns, long_table
 from .io_util import materialize, release
+from .relational import ordered_concat
 
 _CONVS_PER_SF = 4000  # sf0.01 → 40 convs
 _MIN_CONVS = 8
@@ -274,7 +275,7 @@ def x_blocks_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_nodes_density_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3/D4 as Catalyst-planned ops over the exploded NODE table —
     the relational twin of the fused in-UDF classification. Recomputes
-    main text per turn with groupBy + ordered array_sort concat and the
+    main text per turn with groupBy + ``ordered_concat`` and the
     SAME density rule (constants from core.htmldom); equality with the
     fused path is asserted in tests/test_relational_nodes.py."""
     from ..core.htmldom import MAX_LINK_DENSITY, MIN_CONTENT_CHARS
@@ -288,13 +289,7 @@ def x_nodes_density_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_link_chars").alias("n_link_chars"),
         F.max(F.col("in_dropped").cast("int")).cast("boolean").alias("in_dropped"),
         F.max(F.col("in_table").cast("int")).cast("boolean").alias("in_table"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("node_id", "text"))),
-                lambda x: x["text"],
-            ),
-        ).alias("block_text"),
+        ordered_concat(["node_id"], "text", " ").alias("block_text"),
     )
     content = blocks.filter(
         (~F.col("in_dropped"))
@@ -304,15 +299,7 @@ def x_nodes_density_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         content.groupBy("conv_id", "turn_idx")
-        .agg(
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("ord", "block_text"))),
-                    lambda x: x["block_text"],
-                ),
-            ).alias("extracted_text")
-        )
+        .agg(ordered_concat(["ord"], "block_text", "\n").alias("extracted_text"))
         .orderBy("conv_id", "turn_idx")
     )
 
@@ -588,8 +575,8 @@ def x_conv_prefix_dedup(spark: SparkSession, sf_dir: str,
     Plan shape at 10^12 turns: the prefix scan filters turn_idx < k
     at the source (pushed to the bucketed parquet scan, k/avg_turns of
     the table read); the fingerprint agg groups by conv_id — the table
-    is bucketed by conv_id, so no exchange — via the repo's
-    struct-sorted collect_list (F5: partition-order independent);
+    is bucketed by conv_id, so no exchange — via ``ordered_concat``,
+    the struct-sorted collect_list (F5: partition-order independent);
     grouping then shuffles ONE row per conversation (4 orders smaller
     than the turn table) on prefix_fp. No UDF anywhere."""
     tdf = fixture_transcripts(spark, sf_dir).select(
@@ -601,22 +588,7 @@ def x_conv_prefix_dedup(spark: SparkSession, sf_dir: str,
         aug.filter(F.col("turn_idx") < k)
         .groupBy("conv_id")
         .agg(
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    F.col("turn_idx").alias("i"),
-                                    line.alias("s"),
-                                )
-                            )
-                        ),
-                        lambda st: st.s,
-                    ),
-                    "\x1e",
-                )
-            ).alias("prefix_fp"),
+            F.md5(ordered_concat(["turn_idx"], line, "\x1e")).alias("prefix_fp"),
             F.count(F.lit(1)).cast("int").alias("n_prefix_turns"),
         )
     )
@@ -650,9 +622,9 @@ def x_dpo_pairs(spark: SparkSession, sf_dir: str,
     the part under test — fully deterministic and twin-checkable.
 
     Plan shape at 10^12 turns: turn_idx <= k filters push to the
-    bucketed scan; prompt assembly is the struct-sorted collect_list
-    per conv (no exchange on the bucketed table); the final shape is
-    two conv_id equi-joins of conv-level rows (one row per retry
+    bucketed scan; prompt assembly is ``ordered_concat`` per conv (no
+    exchange on the bucketed table); the final shape is two conv_id
+    equi-joins of conv-level rows (one row per retry
     family — 5 orders smaller than the turn table). No UDF."""
     tdf = fixture_transcripts(spark, sf_dir).select(
         "conv_id", "turn_idx", "role", "text"
@@ -663,22 +635,7 @@ def x_dpo_pairs(spark: SparkSession, sf_dir: str,
     prompt = (
         fam.filter(F.col("turn_idx") < k)
         .groupBy("conv_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                F.col("turn_idx").alias("i"),
-                                line.alias("s"),
-                            )
-                        )
-                    ),
-                    lambda st: st.s,
-                ),
-                "\n",
-            ).alias("prompt")
-        )
+        .agg(ordered_concat(["turn_idx"], line, "\n").alias("prompt"))
     )
     chosen = fam.filter(F.col("turn_idx") == k).select(
         "conv_id", "role", F.col("text").alias("chosen")
@@ -874,21 +831,14 @@ def x_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.struct("conv_id", "turn_idx", "line_no") == F.col("w"))
         ).alias("keep"),
     )
-    kept_struct = F.when(
-        F.col("keep"), F.struct("line_no", "line")
-    )  # collect_list skips the NULLs of dropped lines
     return (
         flagged.groupBy("conv_id", "turn_idx")
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_lines"),
             F.sum(F.col("keep").cast("int")).cast("int").alias("n_kept"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)),
-                    lambda s: s["line"],
-                ),
-                "\n",
-            ).alias("cleaned_text"),
+            # a dropped line's NULL adds nothing to the concat
+            ordered_concat(["line_no"], F.when(F.col("keep"), F.col("line")),
+                           "\n").alias("cleaned_text"),
         )
     )
 
@@ -896,24 +846,14 @@ def x_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _template_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(conv_id, turn_idx, template_id, n_nodes) — the per-turn DOM
     skeleton fingerprint: md5 of the node_id-ordered (depth:tag)
-    sequence (struct-sorted collect_list, the B4 ordered-aggregation
-    pattern). ONE groupBy over the conv_id-bucketed committed nodes
-    table; the 32-byte key is what every downstream template op
+    sequence (``ordered_concat``, the B4 ordered aggregation). ONE
+    groupBy over the conv_id-bucketed committed nodes table; the
+    32-byte key is what every downstream template op
     shuffles, never the node list."""
     nodes = fixture_nodes(spark, sf_dir)
-    tok = F.concat_ws(
-        ":", F.col("depth").cast("string"), F.col("tag")
-    ).alias("t")
+    tok = F.concat_ws(":", F.col("depth").cast("string"), F.col("tag"))
     return nodes.groupBy("conv_id", "turn_idx").agg(
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("node_id", tok))),
-                    lambda s: s["t"],
-                ),
-                "|",
-            )
-        ).alias("template_id"),
+        F.md5(ordered_concat(["node_id"], tok, "|")).alias("template_id"),
         F.count(F.lit(1)).cast("int").alias("n_nodes"),
     )
 

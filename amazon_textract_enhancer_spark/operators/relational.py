@@ -7,14 +7,34 @@ Scale notes are inline: broadcast hints for dimension joins, two-phase
 ordered aggregation via array_sort(collect_list(struct(...))) — NEVER a
 bare collect_list (SURVEY.md §2.E "Sort aggregation" — the №1
 correctness trap), partial aggregation left to Catalyst.
+
+``ordered_concat`` below is the one place that rule is written: every
+order-sensitive string concat in the package calls it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io_util import t
+
+
+def ordered_concat(keys: list, value, sep: str) -> Column:
+    """The order-sensitive concat (B4): every ``value`` of the group
+    joined by ``sep`` in ``keys`` order, ties broken by the value. The
+    sort keys ride INSIDE the collected struct —
+    ``array_sort(collect_list(struct(*keys, value)))`` — because
+    collect_list order is undefined after a shuffle. A null ``value``
+    adds nothing (concat_ws skips nulls), so callers drop elements by
+    nulling them. ``keys`` are column names or Columns; ``value`` is a
+    column name or a Column."""
+    v = (F.col(value) if isinstance(value, str) else value).alias("value")
+    return F.concat_ws(
+        sep,
+        F.transform(F.array_sort(F.collect_list(F.struct(*keys, v))),
+                    lambda x: x["value"]),
+    )
 
 
 def b2_filter_scan_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,6 +115,7 @@ def b4_ordered_text_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     general B4 path (core/blocks.py get_text) keeps structs."""
     li = t(spark, sf_dir, "lineitem")
     enc = F.col("l_linenumber") * 256 + F.ascii("l_returnflag")
+    # not ordered_concat: the packed int above IS the sort key (r6)
     return li.groupBy("l_orderkey").agg(
         F.concat_ws(
             " ",
@@ -122,22 +143,10 @@ def b5_two_level_ordered_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").repartition("user_id")
     day = ev.withColumn("day", F.to_date("ts"))
     per_day = day.groupBy("user_id", "day").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
-                lambda x: x["event_type"],
-            ),
-        ).alias("day_text")
+        ordered_concat(["ts", "event_id"], "event_type", " ").alias("day_text")
     )
     return per_day.groupBy("user_id").agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("day", "day_text"))),
-                lambda x: x["day_text"],
-            ),
-        ).alias("doc_text")
+        ordered_concat(["day"], "day_text", "\n").alias("doc_text")
     )
 
 

@@ -9,7 +9,9 @@ tokens inverted index with TF ranking + deterministic top-k.
 This module is the ONE definition of C6, "text → terms (lowercase,
 split on non-alnum)", for every text operator in the package (serving,
 textstats, dedup, curation): no other module splits on
-``TOKEN_PATTERN`` or hand-writes the k-gram position explode, except
+``TOKEN_PATTERN`` or hand-writes the k-gram position explode or the
+in-row k-gram ``transform`` (``_bpe_train``'s symbol pairs over the
+vocab table aside), except
 the Python-side Misra-Gries pass of ``textstats.heavy_hitters``, whose
 pandas workers cannot evaluate a Column (``tests/test_tokenizer.py``
 guards this). The policy comes in three forms because the consumers
@@ -29,7 +31,8 @@ need three shapes:
   splits to ``["", "a", "b"]``), so the two are not interchangeable.
 
 ``kgrams`` is the one k-gram expansion over an already-bound token
-array column.
+array column (one row per k-gram); ``kgram_array`` is its in-row
+form (one array per row).
 """
 
 from __future__ import annotations
@@ -88,6 +91,20 @@ def kgrams(df: DataFrame, k: int, keep: list[str]) -> tuple[DataFrame, list[Colu
         *keep, F.explode(F.sequence(F.lit(1), F.size("L") - (k - 1))).alias("i"), "L"
     )
     return rows, [F.element_at(F.col("L"), F.col("i") + j) for j in range(k)]
+
+
+def kgram_array(k: int, f) -> Column:
+    """The in-row k-gram expansion: ``f`` over every k-gram of the
+    BOUND token-array column ``L`` as one array column,
+    ``transform(sequence(1, size(L) - (k-1)), i -> f(L[i..i+k-1]))``,
+    where ``f`` takes the k ``element_at`` part columns. Same contract
+    as ``kgrams``: ``L`` is already projected, and the caller filters
+    rows with fewer than k tokens (``sequence(1, 0)`` counts DOWN)."""
+    L = F.col("L")
+    return F.transform(
+        F.sequence(F.lit(1), F.size(L) - (k - 1)),
+        lambda i: f([F.element_at(L, i + j) for j in range(k)]),
+    )
 
 
 def doc_lengths_of(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFrame:

@@ -492,6 +492,7 @@ def ivf_build_index(
         means = dims.groupBy("bucket", "dim").agg(F.avg("x").alias("m"))
         raw = (
             means.groupBy("bucket")
+            # a vector, not a string join: no ordered_concat
             .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("a"))
             .select(
                 F.col("bucket").alias("cent_id"),
@@ -989,6 +990,26 @@ def embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 JL_DIMS = 8
 
 
+def _jl_proj(r: int) -> Column:
+    """The ``r`` unscaled projections of the double vector ``v`` onto
+    the derived ±1 directions: sign(i, k) = +1 iff the first hex digit
+    of md5("i_k") < '8'. Each dot product is an in-order fold, so it
+    is IEEE-identical to the DuckDB twins' list_sum; callers apply
+    their own scale, rounding or sign bits."""
+    return F.expr(
+        f"""
+        transform(sequence(1, {r}), k ->
+            aggregate(
+                zip_with(v, sequence(1, size(v)), (x, i) ->
+                    CASE WHEN conv(substring(md5(concat(
+                             cast(i AS STRING), '_', cast(k AS STRING))),
+                             1, 1), 16, 10) < 8
+                         THEN x ELSE -x END),
+                CAST(0.0 AS DOUBLE), (acc, e) -> acc + e))
+        """
+    )
+
+
 def embed_random_projection(
     spark: SparkSession, sf_dir: str, *, r: int = JL_DIMS
 ) -> DataFrame:
@@ -1010,19 +1031,8 @@ def embed_random_projection(
     matrix (swap in a broadcast sign table if CPU ever beats
     network — same output either way)."""
     emb = _emb_double(spark, sf_dir, read=t_spread)
-    proj = F.expr(
-        f"""
-        transform(sequence(1, {r}), k ->
-            round(
-                aggregate(
-                    zip_with(v, sequence(1, size(v)), (x, i) ->
-                        CASE WHEN conv(substring(md5(concat(
-                                 cast(i AS STRING), '_', cast(k AS STRING))),
-                                 1, 1), 16, 10) < 8
-                             THEN x ELSE -x END),
-                    CAST(0.0 AS DOUBLE), (acc, e) -> acc + e)
-                / sqrt({r}), 6) + 0.0)
-        """
+    proj = F.transform(
+        _jl_proj(r), lambda y: F.round(y / F.sqrt(F.lit(r)), 6) + 0.0
     )
     return (
         emb.select("vec_id", F.posexplode(proj).alias("k0", "y"))
@@ -1056,18 +1066,7 @@ def ann_lsh_portable(
     bucketed table is committed and the probe is partition pruning —
     the IVF pattern with hyperplane geometry."""
     emb = _emb_double(spark, sf_dir, read=t_spread)
-    proj = F.expr(
-        f"""
-        transform(sequence(1, {ANN_PORTABLE_BITS}), kk ->
-            aggregate(
-                zip_with(v, sequence(1, size(v)), (x, i) ->
-                    CASE WHEN conv(substring(md5(concat(
-                             cast(i AS STRING), '_', cast(kk AS STRING))),
-                             1, 1), 16, 10) < 8
-                         THEN x ELSE -x END),
-                CAST(0.0 AS DOUBLE), (acc, e) -> acc + e))
-        """
-    )
+    proj = _jl_proj(ANN_PORTABLE_BITS)
     bucket = F.expr(
         f"aggregate(zip_with(proj, sequence(0, {ANN_PORTABLE_BITS - 1}), "
         "(y, b) -> if(y >= 0, shiftleft(1, b), 0)), 0, (acc, x) -> acc | x)"
@@ -1197,6 +1196,7 @@ def _pq_train_codebooks_df(
     # the 2-round train at sf0.1). Each round's checkpoint releases
     # the one it was computed from.
     cb = materialize(scents.groupBy().agg(
+        # a codebook array, not a string join: no ordered_concat
         F.array_sort(F.collect_list(F.struct("s", "cent_id", "cv")))
         .alias("cb")
     ), "pq_train:codebook")
@@ -1251,7 +1251,8 @@ def _pq_train_codebooks_df(
         )
         # collapse (s, cluster, dim, mu) straight back into the 1-row
         # codebook: array_sort orders by (s, cluster, dim), so the
-        # filter-per-(s, cluster) reshape reads means in dim order
+        # filter-per-(s, cluster) reshape reads means in dim order (a
+        # codebook array, not a string join: no ordered_concat)
         cb = materialize(flat.groupBy().agg(
             F.array_sort(
                 F.collect_list(F.struct("s", "cluster", "dim", "mu"))
@@ -1304,6 +1305,7 @@ def _pq_codebook_row(cents: DataFrame) -> DataFrame:
     single collected row (sorted by (s, cent_id), so subspaces come
     out s-ascending and codes cent_id-ascending — identical layout)."""
     fl = cents.groupBy().agg(
+        # a codebook array, not a string join: no ordered_concat
         F.array_sort(F.collect_list(F.struct("s", "cent_id", "cv")))
         .alias("fl")
     )

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .io_util import materialize, t
-from .serving import kgrams, split_terms, terms, tokenize
+from .serving import kgram_array, kgrams, split_terms, terms, tokenize
 
 # deterministic stopword-hit language heuristic (mirrored in SQL)
 EN_MARKERS = (" the ", " a ", " data ", " fast ")
@@ -218,17 +218,10 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = terms("text")
     base = docs.select("doc_id", toks.alias("L")).filter(F.size("L") >= 2)
-    arr = F.col("L")
     bigs = base.select(
         "doc_id",
         F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size(arr) - 2),
-                lambda i: F.concat(
-                    F.element_at(arr, i + 1), F.lit(" "),
-                    F.element_at(arr, i + 2),
-                ),
-            )
+            kgram_array(2, lambda p: F.concat(p[0], F.lit(" "), p[1]))
         ).alias("pair"),
     ).select(
         "doc_id", "pair",

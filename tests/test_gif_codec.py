@@ -234,7 +234,7 @@ def test_jpeg_dc_only_blocks_are_exact():
     (DC step 16, FDCT DC = 8*(v-128)) — the property the oracle-pinned
     query relies on. Odd values would quantize with loss."""
     from amazon_textract_enhancer_spark.core.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
@@ -249,8 +249,8 @@ def test_jpeg_dc_only_blocks_are_exact():
             for y in range(8):
                 row = (by * 8 + y) * w + bx * 8
                 px[row:row + 8] = bytes([v]) * 8
-        assert decode_jpeg_gray(encode_jpeg_gray(w, h, bytes(px))) == \
-            (w, h, bytes(px))
+        assert decode_jpeg(encode_jpeg_gray(w, h, bytes(px))) == \
+            (w, h, 1, bytes(px))
 
 
 def test_jpeg_gradient_round_trip_psnr():
@@ -259,14 +259,15 @@ def test_jpeg_gradient_round_trip_psnr():
     import math
 
     from amazon_textract_enhancer_spark.core.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     w, h = 24, 16
     px = bytes(min(255, (x * 7 + y * 5) % 256) for y in range(h)
                for x in range(w))
-    _, _, dec = decode_jpeg_gray(encode_jpeg_gray(w, h, px))
+    _, _, channels, dec = decode_jpeg(encode_jpeg_gray(w, h, px))
+    assert channels == 1
     mse = sum((a - b) ** 2 for a, b in zip(px, dec)) / len(px)
     psnr = 10 * math.log10(255 * 255 / max(mse, 1e-9))
     assert psnr > 30, psnr
@@ -274,31 +275,31 @@ def test_jpeg_gradient_round_trip_psnr():
 
 def test_jpeg_non_multiple_of_8_dimensions():
     from amazon_textract_enhancer_spark.core.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     w, h = 13, 11
     px = bytes((x * 3 + y * 11) % 256 for y in range(h) for x in range(w))
-    jw, jh, dec = decode_jpeg_gray(encode_jpeg_gray(w, h, px))
-    assert (jw, jh) == (w, h) and len(dec) == w * h
+    jw, jh, channels, dec = decode_jpeg(encode_jpeg_gray(w, h, px))
+    assert (jw, jh, channels) == (w, h, 1) and len(dec) == w * h
 
 
 def test_jpeg_hostile_payloads_raise_value_error():
     from amazon_textract_enhancer_spark.core.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     good = encode_jpeg_gray(8, 8, bytes([100] * 64))
     with pytest.raises(ValueError, match="SOI"):
-        decode_jpeg_gray(b"\x00\x00" + good[2:])
+        decode_jpeg(b"\x00\x00" + good[2:])
     with pytest.raises(ValueError):
-        decode_jpeg_gray(good[:40])  # truncated before SOS/EOI
+        decode_jpeg(good[:40])  # truncated before SOS/EOI
     # progressive SOF2 must be rejected, not mis-decoded
     bad = good.replace(b"\xff\xc0", b"\xff\xc2", 1)
     with pytest.raises(ValueError, match="baseline"):
-        decode_jpeg_gray(bad)
+        decode_jpeg(bad)
 
 
 def test_png_wav_truncated_headers_raise_value_error():
@@ -409,12 +410,9 @@ def test_jpeg_color_gradient_round_trip_psnr():
 
 def test_jpeg_gray_still_single_component():
     """Backward compat: decode_jpeg on a gray stream reports 1
-    channel; decode_jpeg_gray on a COLOR stream refuses."""
-    import pytest
-
+    channel; on a COLOR stream it reports 3."""
     from amazon_textract_enhancer_spark.core.jpeg import (
         decode_jpeg,
-        decode_jpeg_gray,
         encode_jpeg_color,
         encode_jpeg_gray,
     )
@@ -423,8 +421,7 @@ def test_jpeg_gray_still_single_component():
     assert decode_jpeg(gray)[2] == 1
     color = encode_jpeg_color(8, 8, bytes([100] * 64), bytes([128]) * 64,
                               bytes([128]) * 64, "444")
-    with pytest.raises(ValueError):
-        decode_jpeg_gray(color)
+    assert decode_jpeg(color)[2] == 3
 
 
 def test_jpeg_color_hostile_payloads_raise_value_error():

@@ -50,25 +50,29 @@ def test_terms_and_split_terms_match_duckdb_and_python(spark):
         assert n_rows.get(i, 0) == len(got_terms or []), s
 
 
-def _heavy_hitters_lines() -> range:
+def _textstats_lines(name: str) -> range:
     tree = ast.parse((PKG / "operators" / "textstats.py").read_text())
     fn = next(
-        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "heavy_hitters"
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == name
     )
     return range(fn.lineno, fn.end_lineno + 1)
 
 
 def test_c6_tokenizer_only_in_serving():
     """Outside ``operators/serving.py`` no package file splits text on
-    the C6 pattern or hand-writes the k-gram position explode; the
-    pattern itself appears only there and in the Python-side
-    heavy-hitter pass."""
+    the C6 pattern or hand-writes the k-gram position explode or the
+    in-row k-gram ``transform`` (``element_at(L, i + …)`` over a lambda
+    position ``i``; ``_bpe_train``'s symbol pairs over a vocab-sized
+    table are exempt); the pattern itself appears only there and in the
+    Python-side heavy-hitter pass."""
     split_pat = re.compile(r"F\.split\(\s*F\.lower\(|F\.split\([^)]*TOKEN_PATTERN")
     kgram_pat = re.compile(
         r"F\.explode\(\s*F\.sequence\(\s*F\.lit\(1\),\s*F\.size\([^()]*\)\s*-"
         r"|F\.element_at\([^()]*,\s*F\.col\(\"i\"\)\s*\+"
     )
-    hh_lines = _heavy_hitters_lines()
+    inrow_pat = re.compile(r"F\.element_at\([^()]*(?:\([^()]*\))?,\s*i\b")
+    hh_lines = _textstats_lines("heavy_hitters")
+    bpe_lines = _textstats_lines("_bpe_train")
     offenders = []
     for p in PKG.rglob("*.py"):
         rel = p.relative_to(PKG)
@@ -78,6 +82,10 @@ def test_c6_tokenizer_only_in_serving():
         for pat in (split_pat, kgram_pat):
             for m in pat.finditer(text):
                 offenders.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1}")
+        for m in inrow_pat.finditer(text):
+            n = text.count(chr(10), 0, m.start()) + 1
+            if not (rel == Path("operators/textstats.py") and n in bpe_lines):
+                offenders.append(f"{rel}:{n}")
         for n, line in enumerate(text.splitlines(), 1):
             if "TOKEN_PATTERN" in line and not (
                 rel == Path("operators/textstats.py") and n in hh_lines
